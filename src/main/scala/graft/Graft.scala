@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** The library's front door: one call gives a SparkSession with every graft
   * surface active — the native function registry, the optimizer rule set
@@ -30,6 +31,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    stats gates bail — measured safe on the full oracle gate and the
   *    sf0.1 bench), and the moment a table is ANALYZE'd ([[enableCbo]])
   *    the session plans join webs from statistics instead of FROM order.
+  *  - Spark's generated-class cache sized to graft's working set
+  *    ([[codegenCacheEntries]]; Spark's default is 100). Working sets,
+  *    counted as the compiles of a run whose cache never evicts, on 4
+  *    cores: the benchmark's corpus workload 217 classes, ann_serve 130
+  *    (plus 4 new classes per pass that no cache size reuses), the olap
+  *    lane (TPC-H q1–q22) 460, and the spec suite 8,639 (FuzzSpec alone
+  *    3,797). With the default, a traced corpus pass (seed 301) compiled
+  *    193 classes, 1.83 s of its 6.03 s; with this value it compiles none,
+  *    and over 10 alternated seed pairs the median untraced pass fell from
+  *    5.27 to 3.53 s.
+  *    Spark sizes the cache once per JVM, the first time it generates code,
+  *    so only the first session's conf counts: [[session]] warns when it
+  *    finds a lower one.
   */
 object Graft extends org.apache.spark.internal.Logging {
 
@@ -51,6 +65,19 @@ object Graft extends org.apache.spark.internal.Logging {
     // ANALYZE'd table is USED the moment it exists.
     .config("spark.sql.cbo.enabled", "true")
     .config("spark.sql.cbo.joinReorder.enabled", "true")
+    .config(codegenCacheKey, codegenCacheEntries.toString)
+
+  /** Entries in Spark's cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`); an evicted class is compiled
+    * again the next time a plan needs it. 12,000 is 1.4× the largest
+    * measured working set (the spec suite's; see "Defaults rationale"
+    * above). The headroom matters: the cache evicts per segment, a quarter
+    * of the entries each, so a value just at the working set would still
+    * evict. It is a ceiling, not a reservation: the cache holds only the
+    * classes a JVM has compiled. */
+  val codegenCacheEntries: Int = 12000
+
+  private val codegenCacheKey = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
 
   /** A ready local session: extensions + functions registered, shuffle
     * width sized to the machine.
@@ -60,7 +87,10 @@ object Graft extends org.apache.spark.internal.Logging {
     * runtime conf (timezone/AQE/shuffle width are all runtime-settable) and
     * `register` patches in the functions + optimizer rule the static
     * `spark.sql.extensions` conf could no longer inject — the promised
-    * semantics hold either way. */
+    * semantics hold either way. The codegen cache size
+    * ([[codegenCacheEntries]]) is the one default that cannot be
+    * re-applied: if the existing session has a lower one, `session` logs
+    * a warning and runs on. */
   def session(master: String = "local[*]", appName: String = "graft"): SparkSession = {
     val cores = Runtime.getRuntime.availableProcessors()
     val s = configure(SparkSession.builder().master(master).appName(appName))
@@ -78,6 +108,17 @@ object Graft extends org.apache.spark.internal.Logging {
     s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
     installResidualPlacement(s)
     functions.GraftFunctions.register(s)
+    // the cache size is a static conf that Spark reads once per JVM, so it
+    // cannot be re-applied like the confs above
+    val cacheEntries = s.conf.get(codegenCacheKey).toInt
+    if (cacheEntries < codegenCacheEntries)
+      logWarning(s"graft.Graft.session: this JVM's Spark session was " +
+        s"created with $codegenCacheKey=$cacheEntries, below graft's " +
+        s"$codegenCacheEntries. Spark sizes its generated-class cache once " +
+        s"per JVM, so queries whose plans need more classes than that " +
+        s"recompile them on every run. Create the first session through " +
+        s"Graft.configure, or pass --conf $codegenCacheKey=" +
+        s"$codegenCacheEntries.")
     s
   }
 

@@ -40,7 +40,9 @@ object Pipeline {
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum("n_words").as("total_words"),
-        round(avg(length(col("t"))), 2).as("avg_chars"))
+        // round(x, 2) rounds the decimal string of x (304.025 → 304.03);
+        // scaling first rounds its binary value, as the oracle's DuckDB does
+        (round(avg(length(col("t"))) * 100, 0) / 100).as("avg_chars"))
       .orderBy("source")
   }
 

@@ -30,6 +30,40 @@ class PipelineSpec extends SparkSpec {
     assert(m.getAs[Long]("empty_docs") >= 0L)
   }
 
+  test("p_e2e avg_chars rounds a tie mean as its DuckDB oracle does") {
+    import spark.implicits._
+    // 39 docs of 304 chars and one of 305: the mean is the double nearest
+    // 304.025, which lies just below the tie, so 304.02 (not 304.03)
+    def doc(i: Int, len: Int): String = {
+      val head = s"doc$i one two three four "
+      head + "x" * (len - head.length)
+    }
+    val dir = new java.io.File("target/p_e2e_tie").getAbsolutePath
+    (0 until 40).map(i => (i.toLong, "src1", doc(i, if (i == 0) 305 else 304)))
+      .toDF("doc_id", "source", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(12161.0 / 40 == 304.025)
+    val got = Pipeline.pE2e(spark, dir).collect().toSeq
+      .map(r => Seq(r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+    assert(got == Seq(Seq("src1", 40L, 240L, 304.02)), got)
+
+    import scala.sys.process._
+    val probe = Process(Seq("python3", "-c", "import duckdb"))
+      .run(ProcessLogger(_ => ())).exitValue()
+    if (probe != 0)
+      cancel("python3+duckdb unavailable — oracle leg skipped")
+    val duck = (Process(Seq("python3", "-c",
+      "import duckdb, sys; con = duckdb.connect(); " +
+        "con.execute(\"CREATE VIEW documents AS SELECT * FROM read_parquet('\" + " +
+        "sys.argv[1] + \"/documents.parquet/*.parquet')\"); " +
+        "print('|'.join(map(repr, con.execute(sys.stdin.read()).fetchone())))",
+      dir)) #< new java.io.ByteArrayInputStream(Pipeline.pE2eSql.getBytes)).!!
+    assert(duck.trim == got.head.map {
+      case s: String => s"'$s'"
+      case v => v.toString
+    }.mkString("|"))
+  }
+
   test("p_sample is deterministic and hits the per-source rates") {
     val a = Pipeline.pSample(spark, sf).collect().map(_.getLong(0)).toSeq
     val b = Pipeline.pSample(spark, sf).collect().map(_.getLong(0)).toSeq

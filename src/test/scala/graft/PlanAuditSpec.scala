@@ -1237,4 +1237,25 @@ class PlanAuditSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"unpartitioned windows in registry plans:\n${offenders.mkString("\n")}")
   }
+
+  test("codegen cache holds the corpus working set: a second run of the " +
+    "corpus entries compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.internal.StaticSQLConf
+    // these entries need about 180 generated classes at sf0.001; Spark's
+    // 100-entry default evicts each before the next run needs it again
+    val entries = Seq("d_exact", "d_cluster", "x_quality", "p_token_budget",
+      "m_image_decode")
+    def runAll(): Unit =
+      entries.foreach(n => SparkEntry.queries(n)(spark, sf).collect())
+    runAll()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    runAll()
+    assert(compiles.getCount - before == 0,
+      s"the second run of ${entries.mkString(", ")} compiled " +
+        s"${compiles.getCount - before} generated classes again")
+    assert(spark.conf.get(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key) ==
+      Graft.codegenCacheEntries.toString)
+  }
 }

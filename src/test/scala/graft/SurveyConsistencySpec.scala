@@ -23,6 +23,16 @@ class SurveyConsistencySpec extends AnyFunSuite {
     afterS2(1).split("## §3 ", 2)(0)
   }
 
+  /** The optimization ledgers, OPTIMIZATION_r*.md, oldest first. */
+  private lazy val ledgers: Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val docs = Files.list(Paths.get(".")).iterator().asScala
+      .filter(_.getFileName.toString.matches("OPTIMIZATION_r\\d+\\.md"))
+      .toSeq.sortBy(_.getFileName.toString)
+    assert(docs.nonEmpty, "no OPTIMIZATION_r*.md ledgers found")
+    docs
+  }
+
   private def mentioned(key: String): Boolean =
     ("(?<![a-z0-9_])" + java.util.regex.Pattern.quote(key) + "(?![a-z0-9_])").r
       .findFirstIn(sec2).isDefined
@@ -135,12 +145,7 @@ class SurveyConsistencySpec extends AnyFunSuite {
     "literal ALTERNATED-RUNS-PLACEHOLDER and cited after-plan dumps that " +
     "were never committed; this is the §8 artifact-claims discipline " +
     "extended to the optimization ledgers)") {
-    import scala.jdk.CollectionConverters._
-    val docs = Files.list(Paths.get(".")).iterator().asScala
-      .filter(_.getFileName.toString.matches("OPTIMIZATION_r\\d+\\.md"))
-      .toSeq.sortBy(_.getFileName.toString)
-    assert(docs.nonEmpty, "no OPTIMIZATION_r*.md ledgers found")
-    docs.foreach { doc =>
+    ledgers.foreach { doc =>
       val txt = Files.readString(doc)
       assert(!txt.contains("PLACEHOLDER"),
         s"$doc still contains a placeholder marker — run the promised " +
@@ -161,6 +166,20 @@ class SurveyConsistencySpec extends AnyFunSuite {
           s"$doc cites ${missing.mkString(", ")} but no such file is " +
             "committed — dump the plan (PlanDump) or correct the citation")
       }
+    }
+  }
+
+  test("OPTIMIZATION_r*.md: every cited ledger or bench artifact " +
+    "(OPTIMIZATION_r*.md, BENCH_*.json, PERF_*.json) is committed — " +
+    "round 17's ledger pointed at an OPTIMIZATION_r18.md never written") {
+    val artifact =
+      "OPTIMIZATION_r\\d+\\.md|(?:BENCH|PERF)_[A-Za-z0-9_]+\\.json".r
+    ledgers.foreach { doc =>
+      val missing = artifact.findAllIn(Files.readString(doc)).toSeq.distinct
+        .filterNot(f => Files.exists(Paths.get(f)))
+      assert(missing.isEmpty,
+        s"$doc cites ${missing.mkString(", ")} but no such file is " +
+          "committed — write it or cite what exists")
     }
   }
 
