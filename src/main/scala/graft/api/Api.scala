@@ -271,12 +271,18 @@ object AnnApi {
     Similarity.ivfpqEncode(canonCorpus(vectors, idCol, vecCol),
       quantizer, books, segments, metric)
 
-  /** Persist an index frame partitioned by cell (the serving layout). */
+  /** Persist an index frame partitioned by cell (the serving layout).
+    * Rows are clustered by cell before the write (one exchange), so each
+    * `cell=<c>/` directory holds one file and a serve opens one file per
+    * probed cell. */
   def writeIndex(index: DataFrame, path: String): Unit =
     Similarity.ivfpqWriteIndex(index, path)
 
   /** Frozen-model delta append to a stored index (n_ivfpq_delta).
-    * `metric` must match the index's build metric. */
+    * `metric` must match the index's build metric. The append encodes the
+    * delta and clusters it by cell (one exchange, sized to the delta, not
+    * the store), so it adds at most one file per cell it touches and
+    * rewrites no existing file. */
   def appendIndex(delta: DataFrame, quantizer: DataFrame,
       books: Array[Double], path: String, segments: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -285,7 +291,12 @@ object AnnApi {
       quantizer, books, path, segments, metric)
 
   /** Serve top-K from a stored cell-partitioned index with partition
-    * pruning to the probed cells. `excludeSelf` as on [[bruteTopK]];
+    * pruning to the probed cells. Building the returned frame runs one
+    * Spark job: it evaluates the probe rows (queries × nprobe ADC tables)
+    * once, and the cell filter and the broadcast side both come from
+    * them. The store is read with the fixed index schema, so `path` must
+    * hold what [[writeIndex]], [[appendIndex]] or the streaming ingest
+    * wrote. `excludeSelf` as on [[bruteTopK]];
     * `metric` must match the index's build metric (probe selection and
     * the per-query ADC tables both follow it). */
   def serveFromStore(queries: DataFrame, path: String,

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
+  StructField, StructType}
 import graft.Tables
 import graft.functions.GraftFunctions
 
@@ -900,20 +902,59 @@ object Similarity {
           flat, lit(segments)).as("codes"))
   }
 
+  /** The stored index's columns, as [[ivfpqEncode]] emits them and
+    * [[writeCells]] lands them. Readers pass it to `spark.read.schema`, so
+    * opening a store runs no Parquet schema-inference job; `cell` is the
+    * partition column in every layout (plain, and the streamed
+    * `batch_id=<id>/cell=<c>/` epochs). */
+  private[graft] val IndexSchema: StructType = StructType(Seq(
+    StructField("cell", IntegerType),
+    StructField("vec_id", LongType),
+    StructField("codes", ArrayType(IntegerType, containsNull = false))))
+
+  /** The one writer of the cell layout: every build, append, streamed
+    * epoch and compaction lands through it. Rows are clustered by `cell`
+    * first, so each write adds at most one file per cell. Unclustered,
+    * every task writes its own file into every cell it holds — up to
+    * tasks × cells tiny files per write, each one a file open and footer
+    * read for every later serve that probes the cell.
+    *
+    * `repartition(col("cell"))`, not the `REBALANCE(cell)` hint: rebalance
+    * lets AQE split a skewed cell across tasks, i.e. into several files,
+    * so "one file per cell" would depend on data size. A cell needs no
+    * splitting here: sizing keeps cells ≈ √n, so a cell's codes stay
+    * small, and the scan still splits a large file by row group. The one
+    * exchange carries only (cell, vec_id, codes) rows, and AQE coalesces
+    * it to the write's size. */
+  private[graft] def writeCells(index: DataFrame, path: String,
+      mode: SaveMode): Unit =
+    index.select(IndexSchema.fieldNames.toSeq.map(col): _*)
+      .repartition(col("cell"))
+      .write.mode(mode).partitionBy("cell").parquet(path)
+
+  /** Open a stored index (any layout [[writeCells]] produced) with the
+    * fixed [[IndexSchema]]. */
+  private[graft] def readIndex(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(IndexSchema).parquet(path)
+
   /** Persist an IVFADC index partitioned by cell — the storage layout a
     * production deployment serves from: each coarse cell is its own
-    * parquet prefix, so a query touches only nprobe directories. */
+    * parquet prefix holding one file, so a query opens only nprobe
+    * files. */
   private[graft] def ivfpqWriteIndex(index: DataFrame, path: String): Unit =
-    index.write.mode("overwrite").partitionBy("cell").parquet(path)
+    writeCells(index, path, SaveMode.Overwrite)
 
   /** INCREMENTAL index maintenance — the ANN twin of d_minhash_delta's
     * stored-index serve: a DELTA of new vectors is assigned and encoded
     * with the FROZEN production model (quantizer + codebooks — no
     * retraining per batch; retrain cadence is an offline decision) and
     * APPENDED to the stored cell-partitioned index. Work is
-    * delta-proportional: one narrow encode pass over the arrivals, a
-    * partitioned append that touches only the delta's cells' directories,
-    * zero rewrite of existing index files, and the serve path is
+    * delta-proportional: one encode pass over the arrivals, then one
+    * exchange of the delta's encoded rows by cell ([[writeCells]]), so
+    * the append adds at most one file per touched cell instead of one per
+    * (task, cell) — without it every append multiplies the files each
+    * later serve opens. The exchange is sized to the delta, never the
+    * store; existing index files are not rewritten, and the serve path is
     * unchanged — the new vectors are immediately probe-visible. Because
     * assignment and encoding are deterministic given the model,
     * base-build + append is BYTE-IDENTICAL to a full build with the same
@@ -921,14 +962,15 @@ object Similarity {
   private[graft] def ivfpqIndexAppend(delta: DataFrame, c: DataFrame,
       books: Array[Double], path: String,
       segments: Int = PqSegments, metric: String = "cosine"): Unit =
-    ivfpqEncode(delta, c, books, segments, metric)
-      .write.mode("append").partitionBy("cell").parquet(path)
+    writeCells(ivfpqEncode(delta, c, books, segments, metric), path,
+      SaveMode.Append)
 
   /** Serve from the STORED index with partition pruning: the probed cell
     * ids (≤ queries × nprobe ints — model-sized, like the quantizer
     * itself) become a static IN-filter, so the parquet scan reads ONLY the
     * probed cells' partitions — at 100 TB the difference between reading
-    * nprobe/cells of the index and all of it. PlanAuditSpec asserts the
+    * nprobe/cells of the index and all of it. Building the serve runs one
+    * Spark job (see [[ivfpqServeFromStoreOn]]). PlanAuditSpec asserts the
     * PartitionFilters actually reach the scan; SimilaritySpec asserts
     * byte-identical results to the in-memory serve. */
   private[graft] def ivfpqServeFromStore(spark: SparkSession, dir: String,
@@ -938,17 +980,28 @@ object Similarity {
 
   /** Frame-based stored-index serve (graft.api.AnnApi): queries (qid, qv)
     * against the cell-partitioned store, partition-pruned to probed
-    * cells. `excludeSelf` as on [[bruteTopk]]. */
+    * cells. `excludeSelf` as on [[bruteTopk]].
+    *
+    * One driver action: the probe rows (queries × nprobe ADC tables — the
+    * rows the broadcast ships through the driver anyway) are collected
+    * once, and both the cell IN-filter and the broadcast side are built
+    * from that one evaluation. A `distinct().collect()` of the cells
+    * beside a broadcast of the lazy probe frame would run the `top_cells`
+    * and `pq_table` kernels twice, in two extra jobs; reading with
+    * [[IndexSchema]] skips the schema-inference job. */
   private[graft] def ivfpqServeFromStoreOn(queries: DataFrame,
       path: String, c: DataFrame, books: Array[Double],
       nprobe: Int = IvfNprobe, segments: Int = PqSegments,
       excludeSelf: Boolean = false, metric: String = "cosine"): DataFrame = {
     val spark = queries.sparkSession
     val probes = ivfpqProbesOn(queries, c, books, nprobe, segments, metric)
-    val cells = probes.select("cell").distinct().collect().map(_.getInt(0))
-    val index = spark.read.parquet(path)
-      .filter(col("cell").isin(cells.map(Integer.valueOf): _*))
-    val probed = index.join(broadcast(probes), "cell")
+    val rows = probes.collectAsList()
+    val local = spark.createDataFrame(rows, probes.schema)
+    val cells = { import scala.jdk.CollectionConverters._
+      rows.asScala.map(_.getAs[Int]("cell")).distinct.sorted }
+    val index = readIndex(spark, path)
+      .filter(col("cell").isin(cells.map(Integer.valueOf).toSeq: _*))
+    val probed = index.join(broadcast(local), "cell")
     val scored = if (excludeSelf) probed.filter(col("vec_id") =!= col("qid"))
                  else probed
     topK(scored.select(col("qid"), col("vec_id").as("vid"),

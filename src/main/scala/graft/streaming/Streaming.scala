@@ -113,6 +113,8 @@ object Streaming {
     * shared with the batch build and n_ivfpq_delta's append) and land it
     * in `batch_id=<id>/cell=<c>/…` under a commit marker — the
     * [[idempotentBatchWrite]] contract specialized to the index layout.
+    * The epoch lands through the index's one writer
+    * (`Similarity.writeCells`), so it holds one file per cell it touches.
     * Partition discovery exposes batch_id AND cell to readers, so the
     * serve path's cell IN-filter still prunes the scan to probed cells
     * only; the epoch level just adds one directory depth. */
@@ -124,9 +126,9 @@ object Streaming {
       new org.apache.hadoop.fs.Path(out, s"batch_id=$batchId"))
     val marker = new org.apache.hadoop.fs.Path(dir, "_GRAFT_COMMITTED")
     if (fs.exists(marker)) return // replay of a committed epoch
-    graft.operators.Similarity.ivfpqEncode(batch, c, books, metric = metric)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("cell").parquet(dir.toString)
+    graft.operators.Similarity.writeCells(
+      graft.operators.Similarity.ivfpqEncode(batch, c, books, metric = metric),
+      dir.toString, org.apache.spark.sql.SaveMode.Overwrite)
     graft.sources.Fs.touch(fs, marker)
   }
 
@@ -215,22 +217,25 @@ object Streaming {
   }
 
   /** Epoch COMPACTION for the streamed ANN index — the standing
-    * maintenance job that closes the [[annIngest]] lifecycle: many small
-    * `batch_id=<id>/cell=<c>/` epoch files (one set per micro-batch)
-    * re-land as ONE base cell-partitioned layout, so the per-query open/
-    * footer cost stops growing with stream age. Read-side nothing
-    * changes — `ivfpqServeFromStore` partition-prunes both layouts the
-    * same way (cell is a partition column in each) — and no re-encoding
-    * happens: codes are copied, the model is untouched. Run it on a
-    * cadence (or an epoch-count threshold) like sink_compact; the swap to
-    * the compacted directory is the same single-writer story as the COW
-    * DML swap. StreamingSpec proves byte-identical serve before/after and
-    * that the compacted store has exactly one directory level. */
+    * maintenance job that closes the [[annIngest]] lifecycle: the
+    * `batch_id=<id>/cell=<c>/` epoch files (one file per touched cell per
+    * micro-batch) re-land as ONE base cell-partitioned layout with one
+    * file per cell, so the per-query open/footer cost stops growing with
+    * stream age. The store is opened with the fixed index schema (no
+    * inference job) and re-landed through the same one writer as a build
+    * (`Similarity.ivfpqWriteIndex`), whose one exchange by cell merges
+    * every epoch's file of a cell into one. Read-side nothing changes —
+    * `ivfpqServeFromStore` partition-prunes both layouts the same way
+    * (cell is a partition column in each) — and no re-encoding happens:
+    * codes are copied, the model is untouched. Run it on a cadence (or an
+    * epoch-count threshold) like sink_compact; the swap to the compacted
+    * directory is the same single-writer story as the COW DML swap.
+    * StreamingSpec proves byte-identical serve before/after and that the
+    * compacted store has exactly one directory level. */
   def ivfpqCompactEpochs(spark: org.apache.spark.sql.SparkSession,
       epochPath: String, outPath: String): Unit =
     graft.operators.Similarity.ivfpqWriteIndex(
-      spark.read.parquet(epochPath).select("cell", "vec_id", "codes"),
-      outPath)
+      graft.operators.Similarity.readIndex(spark, epochPath), outPath)
 
   /** The CDC stream: each micro-batch of (o_orderkey, …, o_totalprice)
     * rows upserts into the stored table via [[cdcUpsertEpoch]]. */

@@ -21,6 +21,38 @@ class PlanAuditSpec extends SparkSpec {
   private def countOccurrences(s: String, sub: String): Int =
     s.sliding(sub.length).count(_ == sub)
 
+  /** `build`'s result and the Spark jobs submitted on this thread while it
+    * runs. Listener events arrive asynchronously, so a fence job in a
+    * second group runs after `build`: once the listener has seen the fence
+    * start, it has seen every earlier job start too. */
+  private def jobsDuring[A](build: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"plan-audit-${java.util.UUID.randomUUID}"
+    val fence = s"$group-fence"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => seen.add(g))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "construction under audit")
+      val result = build
+      sc.setJobGroup(fence, "listener fence")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(fence) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(fence), "listener never saw the fence job")
+      (result, seen.toArray.count(_ == group))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("q1: shipdate filter reaches the parquet scan; schema pruned") {
     val p = plan(Tpch.q1(spark, sf))
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"), p)
@@ -428,8 +460,17 @@ class PlanAuditSpec extends SparkSpec {
     val (c, books, idx) = Similarity.ivfpqBuild(spark, sf)
     val path = "target/ivfpq_index_audit"
     Similarity.ivfpqWriteIndex(idx, path)
+    // building the serve runs one job, the probe rows' collect; the query
+    // frame is opened first, outside the count, because opening it infers
+    // its schema in a job of its own
+    val queries = Tables.t(spark, sf, "embeddings")
+      .filter(org.apache.spark.sql.functions.col("vec_id") < Similarity.NumQueries)
+      .selectExpr("vec_id AS qid", "embedding AS qv")
+    val (built, jobs) = jobsDuring(Similarity.ivfpqServeFromStoreOn(
+      queries, path, c, books, excludeSelf = true))
+    assert(jobs == 1, s"building the stored-index serve ran $jobs Spark jobs")
     val df = Similarity.ivfpqServeFromStore(spark, sf, path, c, books)
-    df.collect()
+    assert(built.collect().toSeq == df.collect().toSeq)
     val p = finalPlan(df)
     // the probed cell ids become a static IN-filter → partition pruning on
     // the cell-partitioned index layout: the scan reads nprobe directories,

@@ -555,22 +555,36 @@ class SimilaritySpec extends SparkSpec {
       Files.walk(Paths.get(p)).iterator().asScala
         .filter(f => f.toString.endsWith(".parquet"))
         .map(f => f.toString -> Files.getLastModifiedTime(f).toMillis).toMap
-    // replicate the entry's steps to snapshot the store between them
+    def filesPerCell(files: Iterable[String]): Map[String, Int] =
+      files.toSeq.map(f => Paths.get(f).getParent.getFileName.toString)
+        .groupBy(identity).map { case (d, fs) => d -> fs.size }
+    // replicate the entry's steps to snapshot the store between them; the
+    // inputs are split over several tasks so every task holds rows of
+    // most cells, as a build at scale does
     val c = Similarity.ivfQuantizer(spark, sf01)
     val (books, _) = Similarity.pqBuild(spark, sf01)
     val path = "target/ivfpq_delta_index_spec"
     val emb = Tables.t(spark, sf01, "embeddings").select("vec_id", "embedding")
-    Similarity.ivfpqWriteIndex(
-      Similarity.ivfpqEncode(
-        emb.filter(col("vec_id") < Similarity.DeltaSplitId), c, books), path)
+    val base = emb.filter(col("vec_id") < Similarity.DeltaSplitId).repartition(4)
+    val delta = emb.filter(col("vec_id") >= Similarity.DeltaSplitId).repartition(2)
+    assert(base.rdd.getNumPartitions >= 4 && delta.rdd.getNumPartitions >= 2)
+    Similarity.ivfpqWriteIndex(Similarity.ivfpqEncode(base, c, books), path)
     val before = indexFiles(path)
-    Similarity.ivfpqIndexAppend(
-      emb.filter(col("vec_id") >= Similarity.DeltaSplitId), c, books, path)
+    // the writer clusters by cell: one file in every cell= directory
+    val baseCells = filesPerCell(before.keys)
+    assert(baseCells.nonEmpty && baseCells.keys.forall(_.startsWith("cell=")))
+    assert(baseCells.values.forall(_ == 1),
+      s"base write left several files in a cell: $baseCells")
+    Similarity.ivfpqIndexAppend(delta, c, books, path)
     val after = indexFiles(path)
     // append grows the store and leaves every base file byte-untouched
     assert(after.size > before.size, "append added no files")
     val touched = before.filter { case (f, t) => after.get(f) != Some(t) }
     assert(touched.isEmpty, s"append rewrote base files: ${touched.keys.take(3)}")
+    // ... and adds at most one file to each cell
+    val added = filesPerCell(after.keys.filterNot(before.contains))
+    assert(added.values.forall(_ == 1),
+      s"append added several files to a cell: $added")
     // the served rows equal the all-at-once build's (same model ⇒ same
     // assignments/codes ⇒ same index content)
     val served = Similarity.ivfpqServeFromStore(spark, sf01, path, c, books)

@@ -828,11 +828,12 @@ class StreamingSpec extends SparkSpec {
     // the frozen production model — trained offline, constant across epochs
     val c = Similarity.ivfQuantizer(spark, sf01)
     val (books, _) = Similarity.pqBuild(spark, sf01)
-    // corpus arrives as three disjoint vector files
+    // corpus arrives as six disjoint vector files, two per micro-batch, so
+    // each epoch's batch spans two tasks
     val embAll = Tables.t(spark, sf01, "embeddings")
       .select("vec_id", "embedding")
-    (0 to 2).foreach { i =>
-      embAll.filter(pmod(col("vec_id"), lit(3)) === i)
+    (0 to 5).foreach { i =>
+      embAll.filter(pmod(col("vec_id"), lit(6)) === i)
         .coalesce(1).write.mode("overwrite").parquet(s"$inDir/c$i")
       moveInto(inDir, s"c$i", f"$i%02d-vecs.parquet")
     }
@@ -840,7 +841,7 @@ class StreamingSpec extends SparkSpec {
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType))))
     val q = Streaming.annIngest(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      spark.readStream.schema(schema).option("maxFilesPerTrigger", "2")
         .parquet(inDir.toAbsolutePath.toString), c, books, outDir, ckpt)
     q.awaitTermination(120000)
     q.stop()
@@ -849,6 +850,12 @@ class StreamingSpec extends SparkSpec {
     assert(epochs.length == 3, s"expected 3 epochs, got ${epochs.length}")
     assert(epochs.forall(d => new java.io.File(d, "_GRAFT_COMMITTED").exists()),
       "uncommitted epoch directory present")
+    // each epoch lands through the index's one writer: one file per cell
+    val epochCells = epochs.flatMap(_.listFiles().filter(_.isDirectory))
+    assert(epochCells.nonEmpty && epochCells.forall(d =>
+      d.getName.startsWith("cell=") &&
+        d.listFiles().count(_.getName.endsWith(".parquet")) == 1),
+      "an epoch holds several files in one cell directory")
     // the streamed index serves byte-identically to the all-at-once build
     val served = Similarity.ivfpqServeFromStore(spark, sf01, outDir, c, books)
       .collect().toSeq
@@ -874,6 +881,9 @@ class StreamingSpec extends SparkSpec {
     assert(new java.io.File(compacted).listFiles()
       .filter(_.isDirectory).forall(_.getName.startsWith("cell=")),
       "compacted store is not the single-level cell layout")
+    assert(new java.io.File(compacted).listFiles().filter(_.isDirectory)
+      .forall(_.listFiles().count(_.getName.endsWith(".parquet")) == 1),
+      "compaction left several files in one cell directory")
     assert(Similarity.ivfpqServeFromStore(spark, sf01, compacted, c, books)
       .collect().toSeq == served, "compaction changed serve results")
   }
