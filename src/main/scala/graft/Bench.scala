@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark (SURVEY.md §6): headline queries over
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
   *
@@ -54,27 +52,12 @@ object Bench {
     // spill rule; see JobAudit's note), with AQE coalescing the small
     // ones. Default unchanged: cpus (the driver's bench protocol).
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the session users get: CBO + join reorder on and the graft rules
+    // installed, over stat-less reads (bench entries read parquet paths
+    // directly and never see catalog stats — the stats-present case is
+    // TpchAudit/JobAudit's lane)
+    val spark = Graft.session(s"local[$cpus]", "graft-bench", shuffle.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CBO=1 (round 17, VERDICT r16 #5 — the CBO-by-default
-    // decision's performance leg): the whole bench with cbo+joinReorder on
-    // and the graft rules installed over the normal stat-less reads — the
-    // cold-start case. The decision needs this ≈ the default bench (no
-    // regression when stats are absent); the stats-PRESENT performance
-    // case is TpchAudit/JobAudit's lane, since bench entries read parquet
-    // paths directly and never see catalog stats.
-    if (sys.env.get("SPARK_GRAFT_CBO").contains("1")) {
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      Graft.installResidualPlacement(spark)
-      System.err.println("[bench] CBO cold-start leg: cbo+joinReorder on, " +
-        "graft rules installed, NO catalog stats")
-    }
 
     def runOnce(name: String, dir: String): Double = {
       val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-debugging main (round 16; extended round 17): dump a JOB family's
   * or TPC-H query's optimized LOGICAL plan plus the INITIAL physical plan
   * — the tree the post-reorder rules receive, and the static join
@@ -20,12 +18,8 @@ object DebugPlan {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val fam = args(1)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("local[8]", "graft-debugplan",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8").toInt)
     spark.sparkContext.setLogLevel("WARN")
     Graft.enableCbo(spark, dir)
     val cboOn = !sys.env.get("GRAFT_CBO").contains("off")

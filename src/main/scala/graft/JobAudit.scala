@@ -31,20 +31,17 @@ object JobAudit {
     val dir = args(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle files are only deleted when the driver GC collects their
-      // ShuffleDependency (ContextCleaner is weak-reference driven); with
-      // a 64 GB audit heap that GC may never come, so 25 families × a
-      // fact-sized shuffle each accumulates >100 GB of dead shuffle files
-      // on one box. Shorten the cleaner's periodic-GC interval and nudge
-      // a GC after every family (below) so each family's shuffle space is
-      // reclaimed before the next one runs.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
+    // shuffle files are only deleted when the driver GC collects their
+    // ShuffleDependency (ContextCleaner is weak-reference driven); with
+    // a 64 GB audit heap that GC may never come, so 25 families × a
+    // fact-sized shuffle each accumulates >100 GB of dead shuffle files
+    // on one box. Shorten the cleaner's periodic-GC interval and nudge
+    // a GC after every family (below) so each family's shuffle space is
+    // reclaimed before the next one runs. The interval is a SparkContext
+    // conf, fixed at creation; SparkConf reads it from this `spark.*`
+    // system property.
+    sys.props("spark.cleaner.periodicGC.interval") = "1min"
+    val spark = Graft.session(s"local[$cpus]", "graft-jobaudit", shuffle.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     // SPARK_GRAFT_JOB_FILTER: comma-separated family subset (debugging);

@@ -21,12 +21,7 @@ object PlanDump {
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", "graft-plandump", shuffle.toInt)
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, dir)

@@ -55,12 +55,8 @@ object QueryProfile {
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", "graft-queryprofile",
+      shuffle.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val log = new JobLog
     spark.sparkContext.addSparkListener(log)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone repro for the Spark 4.1.2 TIMESTAMP_NTZ × CBO crash that
   * [[Graft.analyzeStatSafeColumns]] works around (found by the round-14
   * CBO fuzz leg, minimal shape fz_0039; VERDICT r14 #7 asked for this
@@ -27,11 +25,9 @@ import org.apache.spark.sql.SparkSession
   */
 object ReproNtzCbo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("repro-ntz-cbo").master("local[2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // graft's session runs CBO + join reorder by default — the setting
+    // the crash needs
+    val spark = Graft.session("local[2]", "repro-ntz-cbo", 4)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
@@ -62,8 +58,6 @@ object ReproNtzCbo {
         Graft.analyzeStatSafeColumns(spark, s"$db.t2")
       }
     }
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
     // the crash fires when FilterEstimation prices the range predicate
     // over the stats-bearing NTZ column during join-size estimation
     val sql =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 
 /** Scale-stress data generator (VERDICT r9 #5): writes an N×-sf0.1
   * documents/events/embeddings set with the SAME schemas, vocabularies and
@@ -43,12 +43,7 @@ object ScaleGen {
     val outDir = args(0)
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", "graft-scalegen", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

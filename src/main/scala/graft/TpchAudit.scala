@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** TPC-H counterpart of [[JobAudit]] (VERDICT r14 #3/#4): the CBO headline
   * was proven on JOB's join-web geometry only; this main extends the
   * alternated hand-vs-CBO A/B to q1–q22 — aggregates above joins,
@@ -41,13 +39,10 @@ object TpchAudit {
     val dir = args(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
+    // the cleaner interval as in JobAudit (a SparkContext conf, read from
+    // this system property when the context is created)
+    sys.props("spark.cleaner.periodicGC.interval") = "1min"
+    val spark = Graft.session(s"local[$cpus]", "graft-tpchaudit", shuffle.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     // SPARK_GRAFT_TPCH_CONF="k=v;k=v": arbitrary session confs (JobAudit's

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,26 +15,12 @@ object Verify {
       require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the gate runs on the session users get: cost-based optimization +
+    // join reorder + the graft optimizer rules active over stat-less temp
+    // views. Every oracled result must stay hash-identical; rule gates
+    // that need stats must bail, not break.
+    val spark = Graft.session(s"local[$cpus]", "graft-verify", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CBO=1 (round 17, VERDICT r16 #5 — the CBO-by-default
-    // decision's correctness leg): run the ENTIRE gate with cost-based
-    // optimization + join reorder + the graft optimizer rules active over
-    // the normal stat-less temp views — the cold-start session a user who
-    // flips CBO on without ANALYZE gets. Every oracled result must stay
-    // hash-identical; rule gates that need stats must bail, not break.
-    if (sys.env.get("SPARK_GRAFT_CBO").contains("1")) {
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      Graft.installResidualPlacement(spark)
-      System.err.println("[verify] CBO cold-start leg: cbo+joinReorder on, " +
-        "graft rules installed, NO catalog stats")
-    }
     new java.io.File(outDir).mkdirs()
     // A failed query must be LOUD in the artifact, not silently absent:
     // round 8 lost 57 suites to a shared analysis error and the driver's

@@ -15,15 +15,24 @@ import graft.operators.{Dedup, Multimodal, Pipeline, Similarity, TextAnalysis}
   * vector ops take a corpus (vec_id, embedding: array&lt;float|double&gt;)
   * and queries (qid, qv); outputs use the canonical names documented on
   * each operator.
+  *
+  * Sessions: every entry works on any SparkSession, including one built
+  * without graft's extension — the frame's session gets graft's native
+  * functions at the façade (`ApiUtil.requireCols`), which is a no-op on
+  * a session from `graft.Graft.session`/`configure`.
   */
 private[api] object ApiUtil {
   /** Fail fast with the caller's vocabulary, not an analysis error deep
-    * inside an operator plan. */
+    * inside an operator plan, and register graft's native functions on the
+    * frame's session: the operators behind the façade use them and do not
+    * register them themselves. Every façade entry whose operator calls a
+    * native function goes through here. */
   def requireCols(d: DataFrame, cols: String*): Unit = {
     val missing = cols.filterNot(d.columns.contains)
     require(missing.isEmpty,
       s"graft.api: input frame is missing column(s) ${missing.mkString(", ")} " +
         s"(frame has: ${d.columns.mkString(", ")})")
+    graft.functions.GraftFunctions.register(d.sparkSession)
   }
 }
 
@@ -344,7 +353,7 @@ object MediaApi {
   /** Image near-dup pairs within Hamming ≤ 3 over an (id, ahash) frame
     * (exact-dup pre-aggregated, chunk-pigeonhole blocked). */
   def imageDupPairs(hashes: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(hashes.sparkSession)
+    ApiUtil.requireCols(hashes, "doc_id", "ahash")
     Multimodal.phashPairs(hashes)
   }
 }

@@ -4,14 +4,20 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Registration for graft's native expressions.
   *
   * Two paths to the same registry entries:
   *  - `GraftExtensions` for `spark.sql.extensions=graft.functions.GraftExtensions`
-  *    (the production wiring — survives session cloning and works from pure SQL);
-  *  - `GraftFunctions.register(spark)` for programmatic use on an existing
-  *    session (tests, Verify, Bench).
+  *    (the production wiring — survives session cloning and works from pure
+  *    SQL). `graft.Graft.configure` sets it, so every session graft builds
+  *    (`Graft.session`, the mains, the spec suite) gets the functions here;
+  *  - `GraftFunctions.register(spark)` for programmatic use on a session
+  *    created without the extension. `Graft.session` calls it for a session
+  *    that already existed, and the `graft.api` façade and the public
+  *    `graft.streaming` entries call it on their input's session, so they
+  *    also work on a user's own session. The operators behind them do not.
   *
   * After registration the functions are plain Catalyst expressions: they
   * participate in whole-stage codegen, constant folding and filter pushdown
@@ -19,7 +25,7 @@ import org.apache.spark.sql.functions.expr
   */
 object GraftFunctions {
 
-  private[functions] val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private[graft] val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "cosine_similarity" -> (c => CosineSimilarity(c(0), c(1))),
     "inner_product" -> (c => InnerProduct(c(0), c(1))),
     "l2_distance" -> (c => L2Distance(c(0), c(1))),
@@ -67,18 +73,29 @@ object GraftFunctions {
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     fns.foreach { case (name, builder) =>
-      // idempotent: operators call register() defensively; re-registering an
-      // existing name triggers a "function replaced" WARN per call site.
+      // idempotent: the api façade calls register() on every entry;
+      // re-registering an existing name would WARN "function replaced"
       if (!registry.functionExists(FunctionIdentifier(name)))
         registry.registerFunction(
           FunctionIdentifier(name),
           new ExpressionInfo("graft.functions.GraftFunctions", name),
           builder)
     }
-    if (!spark.experimental.extraOptimizations.contains(HammingZeroAsEquality))
+    // the extension already runs the rule inside the optimizer's own
+    // batches; adding it to extraOptimizations as well would run it twice
+    if (!extensionActive(spark) &&
+      !spark.experimental.extraOptimizations.contains(HammingZeroAsEquality))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ HammingZeroAsEquality
   }
+
+  /** True when `spark` was built with [[GraftExtensions]]: Spark applies
+    * `spark.sql.extensions` from the SparkContext's conf to every session
+    * on that context (including `newSession` and stream clones). */
+  private def extensionActive(spark: SparkSession): Boolean =
+    spark.sparkContext.getConf
+      .get(StaticSQLConf.SPARK_SESSION_EXTENSIONS.key, "")
+      .split(",").map(_.trim).contains(classOf[GraftExtensions].getName)
 
   // Column-API helpers (the session must have been registered first).
   def cosineSimilarity(a: Column, b: Column): Column =

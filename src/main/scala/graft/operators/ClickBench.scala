@@ -338,7 +338,6 @@ object ClickBench {
     * under a tie at the cut both engines keep the same value multiset, so
     * the oracle (spelled with h2o's ROW_NUMBER) hash-matches. */
   def cbH2oTopn(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     ev(spark, dir)
       .groupBy("user_id")
       .agg(expr("topk_pairs(value, event_id, 2)").as("top"))

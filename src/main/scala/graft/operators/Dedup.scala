@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** Deduplication operators over `documents` (SURVEY.md §2.5) — the
   * training-data-pipeline layer. Reference analogue: DataFusion's hash
@@ -153,7 +152,6 @@ object Dedup {
     * with fewer than 3 words have no shingle and are dropped, matching the
     * window formulation. */
   def wordShingleSets(d: DataFrame): DataFrame = {
-    GraftFunctions.register(d.sparkSession)
     // NOT widened (round 17): repartitioning the small-scan input to core
     // count before the kernel was measured as a net REGRESSION here — the
     // pipeline's many downstream stages each inherit the wider partitioning
@@ -169,7 +167,6 @@ object Dedup {
     * form (7.6 s at sf0.1 before tuning) the pipeline's hot spot; the kernel
     * is one pass over the UTF-8 bytes. */
   def charShingleSets(d: DataFrame): DataFrame = {
-    GraftFunctions.register(d.sparkSession)
     // not widened — see wordShingleSets
     d.select(col("doc_id"), expr("char_shingles(text, 5)").as("shingles"))
       .filter(size(col("shingles")) > 0)
@@ -204,7 +201,6 @@ object Dedup {
     * (ApiSpec pins equality both ways — VERDICT r11 #7). */
   def minhashLshPairs(shingleSets: DataFrame, minJaccard: Double,
       persistIntermediate: Boolean = true): DataFrame = {
-    GraftFunctions.register(shingleSets.sparkSession)
     val sh = if (persistIntermediate) persistShingles(shingleSets)
              else shingleSets
     // Candidate pairs by GROUPING the postings per bucket (round 18, guide
@@ -312,7 +308,6 @@ object Dedup {
     * the delta. */
   def minhashDeltaPairs(baseSh0: DataFrame, deltaSh0: DataFrame,
       minJaccard: Double): DataFrame = {
-    GraftFunctions.register(baseSh0.sparkSession)
     val baseSh = persistShingles(baseSh0)
     minhashDeltaAgainst(baseSh, sigBands(baseSh), deltaSh0, minJaccard)
   }
@@ -327,7 +322,6 @@ object Dedup {
     // PAIRS-sized (delta shingles/bands, candidate pairs, candidate-doc
     // shingles) — never the corpus; the corpus-sized persist guard lives
     // in minhashLshPairs (persistShingles note)
-    GraftFunctions.register(baseSh.sparkSession)
     val deltaSh = persistShingles(deltaSh0)
     // cached: referenced twice (delta-vs-index join + the delta bucket
     // grouping) — one minhash_sig pass, not two (see the minhashLshPairs
@@ -492,7 +486,6 @@ object Dedup {
 
   /** SimHash near-dup pairs over any (doc_id, text) frame. */
   def simhashPairsOn(d: DataFrame): DataFrame = {
-    GraftFunctions.register(d.sparkSession)
     // explode + 64 codegen'd sum aggregates (per-row lambda aggregates are
     // interpreted CodegenFallback — same lesson as the minhash signature);
     // map-side partial agg → the shuffle carries 64 longs per doc
@@ -539,7 +532,6 @@ object Dedup {
     * native codegen expression. Planted: every 10th vector re-appears
     * scaled ±5% per coordinate (cosine ≈ 0.9975, signs preserved). */
   def dEmbedDup(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val emb = Tables.t(spark, dir, "embeddings").select("vec_id", "embedding")
     val planted = emb.filter(col("vec_id") % 10 === 0)
       .withColumn("vec_id", col("vec_id") + 1000000L)
@@ -554,7 +546,6 @@ object Dedup {
     * sign-bit blocking + within-bucket exact verification
     * (graft.api.DedupApi's entry point). */
   def embedDupPairsOn(vecs: DataFrame, minCos: Double): DataFrame = {
-    GraftFunctions.register(vecs.sparkSession)
     val bucket = (0 until EmbedBlockBits).map(i =>
       when(element_at(col("embedding"), i + 1) >= 0f, lit(1 << i)).otherwise(lit(0)))
       .reduce(_ + _)
@@ -598,7 +589,6 @@ object Dedup {
   val SemTau = 0.98
 
   def dSemantic(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val emb = Tables.t(spark, dir, "embeddings").select("vec_id", "embedding")
     val planted = emb.filter(col("vec_id") % 10 === 0)
       .withColumn("vec_id", col("vec_id") + 1000000L)
@@ -732,7 +722,6 @@ object Dedup {
       s"numBits=$numBits exceeds MaxBloomBits=$MaxBloomBits (a 64 MB plan " +
         "literal); shard the corpus by hash prefix and admit per shard " +
         "instead of growing one sketch")
-    GraftFunctions.register(corpus.sparkSession)
     // the sketch: one corpus pass, ~numBits/8 bytes on the driver (a model
     // value); might_contain requires a LITERAL/scalar sketch, hence the
     // collect
@@ -781,7 +770,6 @@ object Dedup {
     * per word) — the one hot path that dodged codegen. Now one generated
     * static call per row, zero allocation. */
   def xFingerprint(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // narrow output (doc_id + one long) — kernel once AND narrow exchange
     // (round 18 — see TextAnalysis.narrowSorted; the r17 sort-below form
     // ran the kernel once but range-exchanged the full text column).
@@ -810,7 +798,6 @@ object Dedup {
   val MinHits = 3
 
   def dContam(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val corpus = withPlantedExact(docs(spark, dir))
       .select(col("doc_id"), expr(s"word_shingles(text, $ContamWidth)").as("sh"))
       .filter(size(col("sh")) > 0)

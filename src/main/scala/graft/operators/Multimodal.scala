@@ -707,7 +707,6 @@ object Multimodal {
   }
 
   def mPhashDedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val hashes = aHashOn(phashFrame(spark, dir))
       // referenced twice by the chunk self-join (d_simhash convention)

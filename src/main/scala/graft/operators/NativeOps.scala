@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** Queries exercising graft's native Catalyst expressions (SURVEY §2.10)
   * against independent DuckDB implementations. */
@@ -12,7 +11,6 @@ object NativeOps {
   /** gcd/lcm/hamming over customer keys; date_bin over orders would change
     * row grain, so it gets its own query below. */
   def fNative(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.t(spark, dir, "customer").select(
         col("c_custkey"),
         expr("gcd(c_custkey, cast(c_nationkey as bigint))").as("g"),
@@ -32,7 +30,6 @@ object NativeOps {
     * against DuckDB epoch arithmetic (and, transitively, against f_datetime's
     * pure-arithmetic Spark form). */
   def fDateBin(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.t(spark, dir, "orders")
       .withColumn("ots", col("o_orderdate").cast("timestamp"))
       .select(
@@ -53,7 +50,6 @@ object NativeOps {
     * each embedding with its own reverse (deterministic second vector, no
     * join needed). */
   def fCosine(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.t(spark, dir, "embeddings").select(
         col("vec_id"),
         round(expr("cosine_similarity(embedding, reverse(embedding))"), 6).as("cos_rev"),

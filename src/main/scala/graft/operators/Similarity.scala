@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
   StructField, StructType}
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** Approximate-nearest-neighbor search over `embeddings` (SURVEY.md §2.6).
   * Six tiers: exact brute force (baseline + oracle), random-hyperplane LSH
@@ -71,10 +70,8 @@ object Similarity {
   val BigIvfCells = 64
   val BigIvfNprobe = 8
 
-  private def emb(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
+  private def emb(spark: SparkSession, dir: String): DataFrame =
     Tables.t(spark, dir, "embeddings").select("vec_id", "embedding")
-  }
 
   private def queriesDf(spark: SparkSession, dir: String): DataFrame =
     emb(spark, dir).filter(col("vec_id") < NumQueries)
@@ -124,7 +121,6 @@ object Similarity {
     * row_number-window sink shuffled the whole scored set into one
     * partition per qid), and memory is O(k) per group on every path. */
   def topK(scored: DataFrame, k: Int): DataFrame = {
-    GraftFunctions.register(scored.sparkSession)
     scored
       .groupBy("qid")
       .agg(expr(s"topk_pairs(cos, vid, $k)").as("top"))
@@ -147,7 +143,6 @@ object Similarity {
     * it holds the NEGATED distance — higher is closer everywhere). */
   def bruteTopk(corpus: DataFrame, queries: DataFrame, k: Int,
       excludeSelf: Boolean = false, metric: String = "cosine"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val paired = corpus.crossJoin(broadcast(queries))
     val scored = if (excludeSelf) paired.filter(col("vec_id") =!= col("qid"))
                  else paired
@@ -325,7 +320,6 @@ object Similarity {
   private[graft] def assignTo(corpus: DataFrame, cents: DataFrame,
       inlineMaxCells: Int = AssignInlineMaxCells,
       metric: String = "cosine"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val model = cents.select(col("cell"), col("cv")).collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1)))
     require(model.length >= 2, s"centroid model too small: ${model.length}")
@@ -397,7 +391,6 @@ object Similarity {
   private[graft] def ivfQuantizerOn(vecs: DataFrame,
       iters: Int = QuantIters, cells: Int = IvfCells,
       trainSampleMod: Int = 1, metric: String = "cosine"): DataFrame = {
-    GraftFunctions.register(vecs.sparkSession)
     require(trainSampleMod >= 1, s"trainSampleMod must be >= 1")
     // hash the id before the modulus (ADVICE r11): raw `vec_id % mod` is a
     // SKEWED sample on structured id spaces (every 4th snapshot id, one
@@ -482,7 +475,6 @@ object Similarity {
   private[graft] def ivfProbesOn(queries: DataFrame,
       c: DataFrame, nprobe: Int = IvfNprobe,
       metric: String = "cosine"): DataFrame = {
-    GraftFunctions.register(queries.sparkSession)
     val sorted = c.select(col("cell"), col("cv")).collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
     require(sorted.nonEmpty, "ivf probe selection needs a non-empty model")
@@ -569,7 +561,6 @@ object Similarity {
     * hash-checks every element instead of an opaque blob. The stored-array
     * form is `expr("l2_normalize(embedding)")` — one expression away. */
   def eNormalize(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     // presentation sort BELOW the kernel+explode (round 17 — see
     // TextAnalysis.langidOn): the trailing orderBy's range-sample pass
     // re-ran l2_normalize + posexplode over the corpus, and the exchange
@@ -599,7 +590,6 @@ object Similarity {
     * embedding corpus. Element-exploded output for the same driver-compare
     * reason as e_normalize. */
   def eQuantize(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     // orderBy below the kernel+explode — see eNormalize
     Tables.t(spark, dir, "embeddings")
       .orderBy("vec_id")
@@ -628,7 +618,6 @@ object Similarity {
     * corpus fitting executor page cache or not). Rows-only;
     * SimilaritySpec measures recall vs the exact float top-k. */
   def nQuantTopk(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val q = emb(spark, dir)
       .select(col("vec_id"), expr("quantize_int8(embedding).codes").as("codes"))
     val queries = q.filter(col("vec_id") < NumQueries)
@@ -680,7 +669,6 @@ object Similarity {
   private[graft] def pqTrainOn(vecs: DataFrame, dim: Int,
       iters: Int = QuantIters, segments: Int = PqSegments,
       codebook: Int = PqCodebook, trainSampleMod: Int = 1): Array[Double] = {
-    GraftFunctions.register(vecs.sparkSession)
     require(segments > 0 && dim % segments == 0,
       s"segments=$segments must divide the corpus dimension $dim")
     require(trainSampleMod >= 1, s"trainSampleMod must be >= 1")
@@ -770,7 +758,6 @@ object Similarity {
       iters: Int = QuantIters, segments: Int = PqSegments,
       codebook: Int = PqCodebook, trainSampleMod: Int = 1)
       : (Array[Double], DataFrame) = {
-    GraftFunctions.register(vecs.sparkSession)
     val books = pqTrainOn(vecs, dim, iters, segments, codebook, trainSampleMod)
     // structural by construction (empty cells keep their centroid); cheap
     // last line of defense for the seg-major indexing contract (ADVICE r4)
@@ -789,7 +776,6 @@ object Similarity {
   private[graft] def pqServe(spark: SparkSession, dir: String,
       books: Array[Double], codes: DataFrame,
       segments: Int = PqSegments): DataFrame = {
-    GraftFunctions.register(spark)
     val flat = typedLit(books.toVector)
     val qTables = queriesDf(spark, dir).select(col("qid"),
       call_function("pq_table", col("qv").cast("array<double>"),
@@ -847,7 +833,6 @@ object Similarity {
   private[graft] def ivfpqProbesOn(queries: DataFrame,
       c: DataFrame, books: Array[Double], nprobe: Int = IvfNprobe,
       segments: Int = PqSegments, metric: String = "cosine"): DataFrame = {
-    GraftFunctions.register(queries.sparkSession)
     val flat = typedLit(books.toVector)
     // ADC table metric: l2 uses negated squared-distance partials; cosine
     // and ip share the dot-product table (their rankings differ only in
@@ -875,7 +860,6 @@ object Similarity {
       c: DataFrame, books: Array[Double], index: DataFrame,
       nprobe: Int = IvfNprobe, segments: Int = PqSegments,
       excludeSelf: Boolean = false, metric: String = "cosine"): DataFrame = {
-    GraftFunctions.register(queries.sparkSession)
     val probed = index.join(broadcast(
       ivfpqProbesOn(queries, c, books, nprobe, segments, metric)), "cell")
     val scored = if (excludeSelf) probed.filter(col("vec_id") =!= col("qid"))
@@ -891,7 +875,6 @@ object Similarity {
   private[graft] def ivfpqEncode(vecs: DataFrame, c: DataFrame,
       books: Array[Double], segments: Int = PqSegments,
       metric: String = "cosine"): DataFrame = {
-    GraftFunctions.register(vecs.sparkSession)
     val flat = typedLit(books.toVector)
     // cell assignment follows the serving metric; the PQ code itself is
     // always the L2-nearest sub-centroid (standard PQ — reconstruction
@@ -1054,7 +1037,6 @@ object Similarity {
   def rangeSearch(corpus: DataFrame, queries: DataFrame,
       tau: Double, excludeSelf: Boolean = false,
       metric: String = "cosine"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val paired = corpus.crossJoin(broadcast(queries))
     val scored = if (excludeSelf) paired.filter(col("vec_id") =!= col("qid"))
                  else paired

@@ -66,7 +66,6 @@ object TextAnalysis {
       .orderBy(keys.map(col): _*)
 
   def langidOn(d: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(d.sparkSession)
     val words = split(lower(col("text")), " ")
     val scored = d.withColumn("words", words)
       .filter(size(col("words")) > 0)
@@ -96,7 +95,6 @@ object TextAnalysis {
   /** The quality pass over any (doc_id, text) frame — graft.api.TextApi's
     * entry point; the gate entry above is this core on the driver corpus. */
   def qualityOn(d: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(d.sparkSession)
     val words = split(col("text"), " ")
     // narrow output — kernels once, narrow exchange: see narrowSorted
     narrowSorted(d
@@ -451,10 +449,8 @@ object TextAnalysis {
   val GopherMinAlphaFrac = 0.8
   val GopherMinStop = 2
 
-  def xGopher(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
+  def xGopher(spark: SparkSession, dir: String): DataFrame =
     gopherOn(docs(spark, dir).select("doc_id", "text"))
-  }
 
   /** Gopher scoring applied to any (doc_id, text) frame (spec plants
     * rule-violating docs through the same path). */
@@ -566,7 +562,6 @@ object TextAnalysis {
     // bounded kernel heap without changing any result; at gate scale the
     // branch is empty and AQE collapses it (the p_stratified guard
     // pattern).
-    graft.functions.GraftFunctions.register(d.sparkSession)
     // n_words > 1 ⟺ the text contains a space (split-on-' ' yields
     // spaces+1 tokens) — filtering on instr BEFORE the kernel keeps the
     // predicate off rep_stats: spelling it s.n_words > 1 lets predicate

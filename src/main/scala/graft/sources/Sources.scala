@@ -452,7 +452,6 @@ object Sources extends org.apache.spark.internal.Logging {
         hi: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       least(lit(1023L), floor((x - lo).cast("double") * 1024.0 /
         (hi - lo + 1).cast("double")).cast("long"))
-    graft.functions.GraftFunctions.register(spark)
     d.crossJoin(broadcast(mm))
       .withColumn("cb", bucket10(col("n_chars"), col("c_lo"), col("c_hi")))
       .withColumn("sb", bucket10(col("srcnum"), col("s_lo"), col("s_hi")))

@@ -126,6 +126,7 @@ object Streaming {
       new org.apache.hadoop.fs.Path(out, s"batch_id=$batchId"))
     val marker = new org.apache.hadoop.fs.Path(dir, "_GRAFT_COMMITTED")
     if (fs.exists(marker)) return // replay of a committed epoch
+    graft.functions.GraftFunctions.register(batch.sparkSession)
     graft.operators.Similarity.writeCells(
       graft.operators.Similarity.ivfpqEncode(batch, c, books, metric = metric),
       dir.toString, org.apache.spark.sql.SaveMode.Overwrite)

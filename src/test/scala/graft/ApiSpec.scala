@@ -338,40 +338,32 @@ class ApiSpec extends SparkSpec {
   test("Graft.enableCbo over arbitrary (name -> path) user tables: stats " +
     "land under the user's name, and a quoted path cannot break the DDL " +
     "(VERDICT r13 #6)") {
-    val keep = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
-    try {
-      val n = Graft.enableCbo(spark,
-        Map("their_nation" -> s"$sf/nation.parquet"), dpThreshold = 12)
-      assert(n == 1)
-      val stats = spark.table("spark_catalog.default.their_nation")
-        .queryExecution.optimizedPlan.stats
-      assert(stats.rowCount.exists(_.toLong == 25L),
-        s"renamed user table carries no stats: ${stats.rowCount}")
-      // a LOCATION containing a single quote must round-trip through the
-      // DDL ('' escaping), not break out of the string literal
-      val quoted = "/tmp/graft_api_it's_here"
-      val src = new java.io.File(s"$sf/nation.parquet") // a single file
-      val dst = new java.io.File(quoted)
-      dst.mkdirs()
-      java.nio.file.Files.copy(src.toPath,
-        new java.io.File(dst, "part-00000.parquet").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      Graft.enableCbo(spark, Map("quoted_tbl" -> quoted), dpThreshold = 12)
-      val qstats = spark.table("spark_catalog.default.quoted_tbl")
-        .queryExecution.optimizedPlan.stats
-      assert(qstats.rowCount.exists(_.toLong == 25L),
-        s"quoted-path table carries no stats: ${qstats.rowCount}")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS spark_catalog.default.their_nation")
-      spark.sql("DROP TABLE IF EXISTS spark_catalog.default.quoted_tbl")
-      keep.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) =>
-          if (k.startsWith("spark.sql.cbo")) spark.conf.set(k, "false")
-          else spark.conf.unset(k)
+    withSession { spark =>
+      try {
+        val n = Graft.enableCbo(spark,
+          Map("their_nation" -> s"$sf/nation.parquet"), dpThreshold = 12)
+        assert(n == 1)
+        val stats = spark.table("spark_catalog.default.their_nation")
+          .queryExecution.optimizedPlan.stats
+        assert(stats.rowCount.exists(_.toLong == 25L),
+          s"renamed user table carries no stats: ${stats.rowCount}")
+        // a LOCATION containing a single quote must round-trip through the
+        // DDL ('' escaping), not break out of the string literal
+        val quoted = "/tmp/graft_api_it's_here"
+        val src = new java.io.File(s"$sf/nation.parquet") // a single file
+        val dst = new java.io.File(quoted)
+        dst.mkdirs()
+        java.nio.file.Files.copy(src.toPath,
+          new java.io.File(dst, "part-00000.parquet").toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        Graft.enableCbo(spark, Map("quoted_tbl" -> quoted), dpThreshold = 12)
+        val qstats = spark.table("spark_catalog.default.quoted_tbl")
+          .queryExecution.optimizedPlan.stats
+        assert(qstats.rowCount.exists(_.toLong == 25L),
+          s"quoted-path table carries no stats: ${qstats.rowCount}")
+      } finally {
+        spark.sql("DROP TABLE IF EXISTS spark_catalog.default.their_nation")
+        spark.sql("DROP TABLE IF EXISTS spark_catalog.default.quoted_tbl")
       }
     }
   }

@@ -124,7 +124,6 @@ class DedupSpec extends SparkSpec {
     val nDocs = Tables.t(spark, sf, "documents").count().toInt
     val planted = (0 until nDocs by 50).map(i => (i + 2000000L, i.toLong)).toSet
     assert(planted.subsetOf(found), s"missed planted pairs: ${planted -- found}")
-    graft.functions.GraftFunctions.register(spark)
     val corpus = Dedup.withPlantedExact(Tables.t(spark, sf, "documents"))
       .select(col("doc_id"), expr(s"word_shingles(text, ${Dedup.ContamWidth})").as("sh"))
     val verified = result
@@ -274,7 +273,6 @@ class DedupSpec extends SparkSpec {
 
   test("d_semantic core: keep-min within planted clusters, distinct and cross-cell members survive") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val u = Seq(1f, 0f, 0f, 0f)           // cluster seed
     val uEps = Seq(0.999f, 0.01f, 0f, 0f) // cos ~ 0.9999 to u
     val uEps2 = Seq(0.998f, 0.02f, 0f, 0f)
@@ -352,7 +350,6 @@ class DedupSpec extends SparkSpec {
     // the sketch must do real routing on the planted batch: resent docs
     // are bloom-positive (no false negatives ⇒ every true dup flags), and
     // at 0.02% FP the ' fresh' docs are overwhelmingly bloom-negative
-    graft.functions.GraftFunctions.register(spark)
     val corpus = Tables.t(spark, sf, "documents").select("doc_id", "text")
     val blob = corpus.agg(org.apache.spark.sql.functions.call_function(
         "bloom_filter_agg", xxhash64(col("text")), lit(1000000L),

@@ -73,7 +73,6 @@ class ErrorSurfaceSpec extends SparkSpec {
   }
 
   test("graft native expressions validate their inputs at analysis time") {
-    graft.functions.GraftFunctions.register(spark)
     val e = intercept[AnalysisException] {
       spark.sql("SELECT cosine_similarity(1, 2)").collect()
     }
@@ -89,7 +88,6 @@ class ErrorSurfaceSpec extends SparkSpec {
     // pq_score/pq_encode are user-callable SQL functions; on UnsafeArrayData
     // an unchecked out-of-range index is a raw-memory read returning garbage
     // (ADVICE r4) — they must throw a clear error instead
-    graft.functions.GraftFunctions.register(spark)
     val badCode = intercept[Exception] {
       spark.sql(
         "SELECT pq_score(array(0, 9), array(1D, 2D, 3D, 4D, 5D, 6D, 7D, 8D))")

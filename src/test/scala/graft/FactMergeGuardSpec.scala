@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.FactMergeGuard
 import graft.operators.Job
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 
@@ -18,32 +19,15 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * counter-read) lives in BASELINE.md round-16. */
 class FactMergeGuardSpec extends SparkSpec {
 
-  private def withCbo[A](body: => A): A = {
-    val db = "spark_catalog.default"
-    val before = Seq("spark.sql.cbo.enabled",
-      "spark.sql.cbo.joinReorder.enabled",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      FactMergeGuard.flag, FactMergeGuard.factFloorKey)
-      .map(k => k -> spark.conf.getOption(k))
+  private def withCbo[A](body: SparkSession => A): A = withSession { spark =>
     try {
-      Graft.defaultCboTables.foreach(spark.catalog.dropTempView)
       Graft.enableCbo(spark, sf)
       // spec-scale lineitem is ~tens of KB — drop the fact floor so the
       // decade geometry is reproducible here
       spark.conf.set(FactMergeGuard.factFloorKey, "1k")
-      body
-    } finally {
-      Graft.defaultCboTables.foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS $db.$t"))
-      before.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) =>
-          if (k.startsWith("spark.sql.cbo")) spark.conf.set(k, "false")
-          else spark.conf.unset(k)
-      }
-      Tables.registerViews(spark, sf)
-    }
+      body(spark)
+    } finally Graft.defaultCboTables.foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS spark_catalog.default.$t"))
   }
 
   private def bareLegTable(p: LogicalPlan): Option[String] = p match {
@@ -64,7 +48,7 @@ class FactMergeGuardSpec extends SparkSpec {
           } yield tb == tc && tb == "lineitem").getOrElse(false) => j
     }
 
-  private def cboPlan(sql: String): LogicalPlan =
+  private def cboPlan(sql: String)(implicit spark: SparkSession): LogicalPlan =
     spark.sql(sql).queryExecution.optimizedPlan
 
   private val origSql =
@@ -72,7 +56,7 @@ class FactMergeGuardSpec extends SparkSpec {
 
   test("guard on: no bushy same-fact role merge survives in job_19a's " +
     "reordered tree (every lineitem role threads through the spine)") {
-    withCbo {
+    withCbo { implicit spark =>
       spark.conf.set(FactMergeGuard.flag, "true")
       val plan = cboPlan(origSql)
       assert(bushySelfMerges(plan).isEmpty,
@@ -82,7 +66,7 @@ class FactMergeGuardSpec extends SparkSpec {
 
   test("kill switch off: the bushy merge is the DP's own tree and must " +
     "reappear (proves the guard, not something else, removes it)") {
-    withCbo {
+    withCbo { implicit spark =>
       spark.conf.set(FactMergeGuard.flag, "false")
       val plan = cboPlan(origSql)
       assert(bushySelfMerges(plan).nonEmpty,
@@ -92,7 +76,7 @@ class FactMergeGuardSpec extends SparkSpec {
   }
 
   test("fact floor: legs under the floor are never touched") {
-    withCbo {
+    withCbo { implicit spark =>
       spark.conf.set(FactMergeGuard.flag, "true")
       spark.conf.set(FactMergeGuard.factFloorKey, "32g")
       val plan = cboPlan(origSql)
@@ -104,15 +88,13 @@ class FactMergeGuardSpec extends SparkSpec {
   test("inflation variant: with both floors at spec scale, rule on vs " +
     "off returns identical results (whatever re-threading fires is pure " +
     "reassociation; the 100× plan/wall story lives in BASELINE r16)") {
-    withCbo {
+    withCbo { implicit spark =>
       spark.conf.set(FactMergeGuard.roleFloorKey, "1k")
-      try {
-        spark.conf.set(FactMergeGuard.flag, "false")
-        val off = spark.sql(origSql).collect().toSeq
-        spark.conf.set(FactMergeGuard.flag, "true")
-        val on = spark.sql(origSql).collect().toSeq
-        assert(on == off, s"inflation variant changed the result: $on vs $off")
-      } finally spark.conf.unset(FactMergeGuard.roleFloorKey)
+      spark.conf.set(FactMergeGuard.flag, "false")
+      val off = spark.sql(origSql).collect().toSeq
+      spark.conf.set(FactMergeGuard.flag, "true")
+      val on = spark.sql(origSql).collect().toSeq
+      assert(on == off, s"inflation variant changed the result: $on vs $off")
     }
   }
 
@@ -121,7 +103,7 @@ class FactMergeGuardSpec extends SparkSpec {
     "joined-spine gate the rule re-matched its own output with the roles " +
     "rotated and rewrote until the optimizer stack overflowed at plan " +
     "time; planning must terminate and results be rule-on ≡ rule-off") {
-    withCbo {
+    withCbo { implicit spark =>
       // all three roles bare legs of the same fact, above the 1k spec
       // floor; every spanning conjunct a bare attribute equality — the
       // exact geometry that previously never hit a termination argument
@@ -150,7 +132,7 @@ class FactMergeGuardSpec extends SparkSpec {
 
   test("guard on vs off: identical results (pure inner-join " +
     "reassociation)") {
-    withCbo {
+    withCbo { implicit spark =>
       spark.conf.set(FactMergeGuard.flag, "false")
       val off = spark.sql(origSql).collect().toSeq
       spark.conf.set(FactMergeGuard.flag, "true")

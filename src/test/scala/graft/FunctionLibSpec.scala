@@ -305,8 +305,7 @@ class FunctionLibSpec extends SparkSpec {
 
   test("f_try: the NULL-on-error contract is ANSI-invariant — every try_* " +
     "leg returns the same rows with spark.sql.ansi.enabled flipped") {
-    val prev = spark.conf.get("spark.sql.ansi.enabled")
-    try {
+    withSession { spark =>
       spark.conf.set("spark.sql.ansi.enabled", "false")
       val off = FunctionLib.fTry(spark, sf).collect().map(_.toString).sorted
       spark.conf.set("spark.sql.ansi.enabled", "true")
@@ -315,7 +314,7 @@ class FunctionLibSpec extends SparkSpec {
       // and the error legs really are NULL, not wrapped values
       val r = FunctionLib.fTry(spark, sf).limit(1).collect().head
       assert(r.isNullAt(r.fieldIndex("ta_of")) && r.isNullAt(r.fieldIndex("ts_of")))
-    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+    }
   }
 
   test("f_nondet: uuids are distinct per row (the per-row format boolean " +

@@ -94,62 +94,48 @@ class FuzzSpec extends SparkSpec {
   test("CBO differential (VERDICT r13 #3): every join-bearing shape " +
     "returns identical rows with cost-based join reorder + residual " +
     "placement ON vs OFF over ANALYZE'd catalog tables") {
-    val keep = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled",
-      "spark.sql.cbo.joinReorder.dp.threshold",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      functions.FactMergeGuard.factFloorKey,
-      functions.FactMergeGuard.roleFloorKey)
-      .map(k => k -> spark.conf.getOption(k))
     val fuzzTables = Seq("orders", "customer", "lineitem", "part",
       "supplier", "nation", "region")
-    try {
-      // catalog tables are shadowed by same-named temp views — drop the
-      // views so the shapes actually plan against the ANALYZE'd tables
-      fuzzTables.foreach(spark.catalog.dropTempView)
-      Graft.enableCbo(spark, sf)
-      // drop FactMergeGuard's floors to spec scale (round-17, ADVICE r16):
-      // at fuzz data size the production defaults (16g/256m) keep the
-      // guard inert, so without this the differential's FactMergeGuard
-      // coverage would be vacuous — the rule would never rewrite anything
-      spark.conf.set(functions.FactMergeGuard.factFloorKey, "1k")
-      spark.conf.set(functions.FactMergeGuard.roleFloorKey, "1k")
-      def cbo(on: Boolean): Unit = {
-        spark.conf.set("spark.sql.cbo.enabled", on.toString)
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", on.toString)
-      }
-      val joinShapes = Fuzz.generate(Seed, N)
-        .filter(q => q.sql.contains("JOIN") || q.sql.contains("LATERAL"))
-      assert(joinShapes.size >= N / 8,
-        s"only ${joinShapes.size} join-bearing shapes — generator drifted?")
-      joinShapes.foreach { q =>
-        def leg(on: Boolean): Seq[String] = {
-          cbo(on)
-          try spark.sql(q.sql).collect().map(_.toString).sorted.toSeq
-          catch {
-            case e: Throwable => // always name the minimal repro
-              fail(s"${q.name} failed with CBO=$on " +
-                s"(${e.getClass.getSimpleName}: ${e.getMessage}) — SQL:\n${q.sql}", e)
-          }
+    withSession { spark =>
+      try {
+        // the shapes also read the non-relational tables as views; the
+        // relational ones must plan against the ANALYZE'd catalog tables
+        Tables.registerViews(spark, sf)
+        fuzzTables.foreach(spark.catalog.dropTempView)
+        Graft.enableCbo(spark, sf)
+        // drop FactMergeGuard's floors to spec scale (round-17, ADVICE r16):
+        // at fuzz data size the production defaults (16g/256m) keep the
+        // guard inert, so without this the differential's FactMergeGuard
+        // coverage would be vacuous — the rule would never rewrite anything
+        spark.conf.set(functions.FactMergeGuard.factFloorKey, "1k")
+        spark.conf.set(functions.FactMergeGuard.roleFloorKey, "1k")
+        def cbo(on: Boolean): Unit = {
+          spark.conf.set("spark.sql.cbo.enabled", on.toString)
+          spark.conf.set("spark.sql.cbo.joinReorder.enabled", on.toString)
         }
-        val off = leg(on = false)
-        val on = leg(on = true)
-        assert(on == off,
-          s"${q.name}: CBO reorder changed the RESULT (${off.size} vs " +
-            s"${on.size} rows) — SQL:\n${q.sql}")
-      }
-      info(s"${joinShapes.size} join-bearing shapes row-identical under CBO")
-    } finally {
-      fuzzTables.foreach(t =>
+        val joinShapes = Fuzz.generate(Seed, N)
+          .filter(q => q.sql.contains("JOIN") || q.sql.contains("LATERAL"))
+        assert(joinShapes.size >= N / 8,
+          s"only ${joinShapes.size} join-bearing shapes — generator drifted?")
+        joinShapes.foreach { q =>
+          def leg(on: Boolean): Seq[String] = {
+            cbo(on)
+            try spark.sql(q.sql).collect().map(_.toString).sorted.toSeq
+            catch {
+              case e: Throwable => // always name the minimal repro
+                fail(s"${q.name} failed with CBO=$on " +
+                  s"(${e.getClass.getSimpleName}: ${e.getMessage}) — SQL:\n${q.sql}", e)
+            }
+          }
+          val off = leg(on = false)
+          val on = leg(on = true)
+          assert(on == off,
+            s"${q.name}: CBO reorder changed the RESULT (${off.size} vs " +
+              s"${on.size} rows) — SQL:\n${q.sql}")
+        }
+        info(s"${joinShapes.size} join-bearing shapes row-identical under CBO")
+      } finally fuzzTables.foreach(t =>
         spark.sql(s"DROP TABLE IF EXISTS spark_catalog.default.$t"))
-      keep.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) =>
-          if (k.startsWith("spark.sql.cbo.enabled") ||
-            k.contains("joinReorder.enabled")) spark.conf.set(k, "false")
-          else spark.conf.unset(k)
-      }
-      Tables.registerViews(spark, sf) // restore the shared-session views
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.HashProbePreference
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan, SHUFFLE_HASH}
 
 /** Round 17 (VERDICT r16 #2): [[HashProbePreference]] productizes the q9
@@ -15,33 +16,17 @@ class HashProbePreferenceSpec extends SparkSpec {
 
   private val db = "spark_catalog.default"
 
-  private def withCbo[A](body: => A): A = {
-    val keep = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      HashProbePreference.flag, HashProbePreference.probeRatioKey,
-      HashProbePreference.buildMaxKey)
-      .map(k => k -> spark.conf.getOption(k))
+  private def withCbo[A](body: SparkSession => A): A = withSession { spark =>
     try {
-      Graft.defaultCboTables.foreach(spark.catalog.dropTempView)
       Graft.enableCbo(spark, sf)
       // spec-scale gates: broadcast off so the window-clearance gate is
       // trivially met (t <= 0), and a ratio the sf geometry clears
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
       spark.conf.set(HashProbePreference.probeRatioKey, "2")
-      body
-    } finally {
-      Graft.defaultCboTables.foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS $db.$t"))
-      keep.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) =>
-          if (k.startsWith("spark.sql.cbo")) spark.conf.set(k, "false")
-          else spark.conf.unset(k)
-      }
-      Tables.registerViews(spark, sf)
-    }
+      body(spark)
+    } finally Graft.defaultCboTables.foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS $db.$t"))
   }
 
   // the q9/q18 shape at spec scale: orders (small build) probed by
@@ -56,12 +41,12 @@ class HashProbePreferenceSpec extends SparkSpec {
       .exists(_.strategy.contains(SHUFFLE_HASH)) => j.hint
   }
 
-  private def plan(sql: String): LogicalPlan =
+  private def plan(sql: String)(implicit spark: SparkSession): LogicalPlan =
     spark.sql(sql).queryExecution.optimizedPlan
 
   test("q9 shape fires: a small build side probed by a fact above the " +
     "ratio floor gets the SHUFFLE_HASH hint (on the build side)") {
-    withCbo {
+    withCbo { implicit spark =>
       spark.conf.set(HashProbePreference.flag, "true")
       val hints = shjHints(plan(q9Shape))
       assert(hints.nonEmpty, s"no SHUFFLE_HASH hint landed:\n${plan(q9Shape)}")
@@ -70,7 +55,7 @@ class HashProbePreferenceSpec extends SparkSpec {
 
   test("ratio gate: with the probe/build floor above the data's " +
     "asymmetry the rule declines (the q12 exclusion, as a conf bound)") {
-    withCbo {
+    withCbo { implicit spark =>
       spark.conf.set(HashProbePreference.flag, "true")
       spark.conf.set(HashProbePreference.probeRatioKey, "1000000")
       assert(shjHints(plan(q9Shape)).isEmpty)
@@ -81,7 +66,7 @@ class HashProbePreferenceSpec extends SparkSpec {
     "the measured 1.62x regression built the UNFILTERED 150M-row orders " +
     "side (Spark's own bytes-based pick under the blanket conf); this " +
     "rule picks build by ROWS, so that orientation is unreachable") {
-    withCbo {
+    withCbo { implicit spark =>
       spark.conf.set(HashProbePreference.flag, "true")
       // l_quantity stats span ~[1,50]; > 49.0 estimates a ~2% slice, so
       // the filtered lineitem leg is the few-rows side and orders the
@@ -101,7 +86,7 @@ class HashProbePreferenceSpec extends SparkSpec {
 
   test("symmetric fact self-join declines: equal row counts fail the " +
     "probe/build ratio floor, so neither side is hinted") {
-    withCbo {
+    withCbo { implicit spark =>
       spark.conf.set(HashProbePreference.flag, "true")
       val sym =
         """SELECT count(*) AS n
@@ -113,7 +98,7 @@ class HashProbePreferenceSpec extends SparkSpec {
 
   test("broadcast-window clearance: with broadcast available and the " +
     "build inside 8x the threshold, the rule never forces a shuffle") {
-    withCbo {
+    withCbo { implicit spark =>
       spark.conf.set(HashProbePreference.flag, "true")
       // spec-scale orders is far under 8 x 32m — gate must decline
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "32m")
@@ -122,14 +107,14 @@ class HashProbePreferenceSpec extends SparkSpec {
   }
 
   test("kill switch: flag off leaves the plan hint-free") {
-    withCbo {
+    withCbo { implicit spark =>
       spark.conf.set(HashProbePreference.flag, "false")
       assert(shjHints(plan(q9Shape)).isEmpty)
     }
   }
 
   test("rule on vs off: identical results (a strategy hint moves no rows)") {
-    withCbo {
+    withCbo { implicit spark =>
       spark.conf.set(HashProbePreference.flag, "false")
       val off = spark.sql(q9Shape).collect().toSeq
       spark.conf.set(HashProbePreference.flag, "true")

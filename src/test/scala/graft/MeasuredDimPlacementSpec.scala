@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.MeasuredDimPlacement
 import graft.operators.Job
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.EqualTo
 import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LeafNode, LogicalPlan}
 
@@ -38,32 +39,17 @@ class MeasuredDimPlacementSpec extends SparkSpec {
           } => j
     }
 
-  private def withCbo[A](body: => A): A = {
-    val db = "spark_catalog.default"
-    val before = Seq("spark.sql.cbo.enabled",
-      "spark.sql.cbo.joinReorder.enabled",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      MeasuredDimPlacement.flag).map(k => k -> spark.conf.getOption(k))
+  private def withCbo[A](body: SparkSession => A): A = withSession { spark =>
     try {
-      cboTables.foreach(spark.catalog.dropTempView)
       Graft.enableCbo(spark, sf, tables = cboTables)
-      body
-    } finally {
-      cboTables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $db.$t"))
-      before.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) =>
-          if (k.startsWith("spark.sql.cbo")) spark.conf.set(k, "false")
-          else spark.conf.unset(k)
-      }
-      Tables.registerViews(spark, sf)
-    }
+      body(spark)
+    } finally cboTables.foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS spark_catalog.default.$t"))
   }
 
   test("under CBO the LIKE-gated part dim sinks to the bottom of the fact " +
     "side with a broadcast hint (the job_3a geometry)") {
-    withCbo {
+    withCbo { spark =>
       spark.conf.set(MeasuredDimPlacement.flag, "true")
       val plan = spark.sql(Job.job3aSql).queryExecution.optimizedPlan
       val pjs = partJoins(plan)
@@ -85,7 +71,7 @@ class MeasuredDimPlacementSpec extends SparkSpec {
   }
 
   test("kill switch off: the plan is untouched") {
-    withCbo {
+    withCbo { spark =>
       spark.conf.set(MeasuredDimPlacement.flag, "true")
       val on = spark.sql(Job.job3aSql).queryExecution.optimizedPlan
       spark.conf.set(MeasuredDimPlacement.flag, "false")
@@ -100,7 +86,7 @@ class MeasuredDimPlacementSpec extends SparkSpec {
 
   test("measured size above the broadcast threshold: no rewrite (the " +
     "measurement gates, not the pattern alone)") {
-    withCbo {
+    withCbo { spark =>
       spark.conf.set(MeasuredDimPlacement.flag, "true")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
       val gated = spark.sql(Job.job3aSql).queryExecution.optimizedPlan
@@ -113,7 +99,7 @@ class MeasuredDimPlacementSpec extends SparkSpec {
 
   test("no unestimable pattern on the dim: no rewrite (equality filters " +
     "are FilterEstimation's job, not ours)") {
-    withCbo {
+    withCbo { spark =>
       // same web, but the part gate is an estimable equality — the DP
       // already sees its selectivity; the rule must stay out of the way
       val sql = Job.job3aSql.replace("p.p_name LIKE '%red%'",
@@ -131,7 +117,7 @@ class MeasuredDimPlacementSpec extends SparkSpec {
     "key (fresh exprId, borrowed name) must not inherit the real column's " +
     "uniqueness (review r15). Unit-level because the alias paths that " +
     "reach the rule in SQL also carry a cast, which bails earlier") {
-    withCbo {
+    withCbo { spark =>
       import org.apache.spark.sql.catalyst.expressions.AttributeReference
       import org.apache.spark.sql.execution.datasources.LogicalRelation
       import org.apache.spark.sql.types.LongType
@@ -157,7 +143,7 @@ class MeasuredDimPlacementSpec extends SparkSpec {
     "createTime), the measurement bails and the plan is untouched " +
     "(ADVICE r15 — a same-named table in another session/catalog must " +
     "never be counted on this plan's behalf)") {
-    withCbo {
+    withCbo { spark =>
       spark.conf.set(MeasuredDimPlacement.flag, "true")
       // capture the ANALYZED plan now: its LogicalRelation pins today's
       // CatalogTable (createTime T0)
@@ -189,7 +175,7 @@ class MeasuredDimPlacementSpec extends SparkSpec {
     "estimate lands just over the broadcast threshold is re-checked by " +
     "measurement, and the true-size-fits case gets the broadcast hint " +
     "the static estimate denied (the q19/q16 class-2 decade shape)") {
-    withCbo {
+    withCbo { spark =>
       // length(p_name) > 9 is NOT a pattern predicate (no LIKE/contains),
       // and FilterEstimation scores it 1.0 — the estimate carries only the
       // estimable p_size half while the TRUE selectivity is ~0.41 of it
@@ -218,12 +204,11 @@ class MeasuredDimPlacementSpec extends SparkSpec {
       // control: with the re-check window collapsed (factor 1 → the
       // estimate is never 'near' the knee) the rule must stay out
       spark.conf.set(MeasuredDimPlacement.kneeFactorKey, "1")
-      try {
-        val narrow = spark.sql(sql).queryExecution.optimizedPlan
-        assert(partJoins(narrow).forall(j =>
-          j.hint.leftHint.isEmpty && j.hint.rightHint.isEmpty),
-          s"hint applied outside the knee window:\n$narrow")
-      } finally spark.conf.unset(MeasuredDimPlacement.kneeFactorKey)
+      val narrow = spark.sql(sql).queryExecution.optimizedPlan
+      assert(partJoins(narrow).forall(j =>
+        j.hint.leftHint.isEmpty && j.hint.rightHint.isEmpty),
+        s"hint applied outside the knee window:\n$narrow")
+      spark.conf.unset(MeasuredDimPlacement.kneeFactorKey)
       // result identity on vs off
       spark.conf.set(MeasuredDimPlacement.flag, "false")
       val offRows = spark.sql(sql).collect().toSeq
@@ -234,7 +219,7 @@ class MeasuredDimPlacementSpec extends SparkSpec {
 
   test("rule on vs off: identical results (reassociation + a strategy " +
     "hint change nothing but the plan)") {
-    withCbo {
+    withCbo { spark =>
       spark.conf.set(MeasuredDimPlacement.flag, "false")
       val off = spark.sql(Job.job3aSql).collect().toSeq
       spark.conf.set(MeasuredDimPlacement.flag, "true")
@@ -246,17 +231,13 @@ class MeasuredDimPlacementSpec extends SparkSpec {
 
   test("non-CBO sessions are untouched (gated on joinReorder like the " +
     "residual rule)") {
-    val before = spark.conf.getOption("spark.sql.cbo.joinReorder.enabled")
-    try {
+    withSession { spark =>
+      Tables.registerViews(spark, sf)
       spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-      Graft.installResidualPlacement(spark)
       val plan = spark.sql(Job.job3aSql).queryExecution.optimizedPlan
       assert(partJoins(plan).forall(j =>
         j.hint.leftHint.isEmpty && j.hint.rightHint.isEmpty),
         s"rule fired without CBO:\n$plan")
-    } finally before match {
-      case Some(v) => spark.conf.set("spark.sql.cbo.joinReorder.enabled", v)
-      case None => spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
     }
   }
 }

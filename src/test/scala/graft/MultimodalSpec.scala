@@ -233,7 +233,6 @@ class MultimodalSpec extends SparkSpec {
   test("m_phash_dedup hot chunk: planted uniform images (all four chunk " +
     "buckets shared) dedup correctly — C(k,2) hamming-0 pairs, no chunk " +
     "double-count") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     // k uniform images: flat color → every luma equals the grid mean →
     // aHash 0 for all of them → one hot 16-bit bucket per chunk holding

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.GraftFunctions
 import graft.operators.NativeOps
 import org.apache.spark.sql.functions._
 
@@ -8,14 +7,11 @@ import org.apache.spark.sql.functions._
   * codegen (no fallback interpretation, no UDF). */
 class NativeExpressionsSpec extends SparkSpec {
 
-  private def one(sql: String) = {
-    GraftFunctions.register(spark)
+  private def one(sql: String) =
     spark.sql(s"SELECT $sql AS v").collect().head
-  }
 
   test("z_interleave equals the HOF aggregate fold it replaced, for the " +
     "full 10-bit bucket range and beyond") {
-    GraftFunctions.register(spark)
     // the old sink_zorder spelling, kept verbatim as the equality oracle
     val fold =
       """aggregate(sequence(0, 9), 0L, (acc, i) -> acc
@@ -117,7 +113,6 @@ class NativeExpressionsSpec extends SparkSpec {
   }
 
   test("topk_pairs keeps the k best pairs, best-first, deterministic ties") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((1L, 10L, 0.5), (1L, 11L, 0.9), (1L, 12L, 0.9), (1L, 13L, 0.1),
       (2L, 20L, 0.3)).toDF("qid", "vid", "cos")
@@ -216,7 +211,6 @@ class NativeExpressionsSpec extends SparkSpec {
   }
 
   test("native expressions run inside WholeStageCodegen (no fallback)") {
-    GraftFunctions.register(spark)
     val df = Tables.t(spark, sf, "embeddings")
       .select(expr("cosine_similarity(embedding, reverse(embedding))").as("c"))
       .filter(col("c") > -2)
@@ -238,7 +232,6 @@ class NativeExpressionsSpec extends SparkSpec {
 
   test("rep_stats: exact counts under split-on-single-space semantics, " +
     "empty tokens from leading/consecutive/trailing spaces included") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     def stats(s: String): (Int, Int, Int, Int) = {
       val r = Seq(s).toDF("text")

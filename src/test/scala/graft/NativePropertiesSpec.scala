@@ -36,7 +36,6 @@ class NativePropertiesSpec extends SparkSpec {
   }
 
   test("hamming via SQL: symmetric, triangle inequality, zero iff equal") {
-    graft.functions.GraftFunctions.register(spark)
     val xs = Seq(0L, 1L, -1L, 5L, 0x00FFL, Long.MaxValue, Long.MinValue, 12345678L)
     val rows = for (a <- xs; b <- xs; c <- Seq(0L, -1L, 77L)) yield (a, b, c)
     import spark.implicits._
@@ -52,7 +51,6 @@ class NativePropertiesSpec extends SparkSpec {
   }
 
   test("cosine via SQL: bounded in [-1,1], scale-invariant, self=1") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val vecs = Seq(
       Seq(1f, 2f, 3f), Seq(-1f, 0.5f, 2f), Seq(0.1f, -0.2f, 0.3f), Seq(5f, 5f, 5f))
@@ -69,7 +67,6 @@ class NativePropertiesSpec extends SparkSpec {
   }
 
   test("date_bin_us: idempotent and aligned to origin + k*width") {
-    graft.functions.GraftFunctions.register(spark)
     val df = spark.sql(
       """SELECT date_bin_us(w, ts, o) AS b1,
         |       date_bin_us(w, date_bin_us(w, ts, o), o) AS b2,

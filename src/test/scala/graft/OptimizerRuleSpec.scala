@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** §2.10: the HammingZeroAsEquality optimizer rule turns an opaque
@@ -9,7 +8,6 @@ import org.apache.spark.sql.functions._
 class OptimizerRuleSpec extends SparkSpec {
 
   private def signatureFrames = {
-    GraftFunctions.register(spark)
     val base = Tables.t(spark, sf, "documents")
       .select(col("doc_id"), xxhash64(col("text")).as("h"))
     (base.as("x"), base.withColumnRenamed("doc_id", "doc_id2").as("y"))
@@ -37,7 +35,6 @@ class OptimizerRuleSpec extends SparkSpec {
   }
 
   test("non-zero thresholds are left alone (not semantics-preserving)") {
-    GraftFunctions.register(spark)
     val df = spark.sql("SELECT hamming_distance(5L, 7L) <= 1 AS near")
     assert(df.collect().head.getBoolean(0)) // distance 1 → true; a=b would say false
   }

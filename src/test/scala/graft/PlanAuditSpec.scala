@@ -113,7 +113,6 @@ class PlanAuditSpec extends SparkSpec {
   test("topK runs as a partial-aggregated bounded-heap aggregate, not a window sink") {
     import org.apache.spark.sql.functions._
     val corpus = Tables.t(spark, sf, "embeddings").select("vec_id", "embedding")
-    graft.functions.GraftFunctions.register(spark)
     val queries = corpus.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val scored = corpus.crossJoin(broadcast(queries))
@@ -1298,5 +1297,21 @@ class PlanAuditSpec extends SparkSpec {
         s"${compiles.getCount - before} generated classes again")
     assert(spark.conf.get(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key) ==
       Graft.codegenCacheEntries.toString)
+  }
+
+  test("HammingZeroAsEquality runs in one place on a graft session: the " +
+    "extension's optimizer batch, not extraOptimizations as well") {
+    import graft.functions.HammingZeroAsEquality
+    import org.apache.spark.sql.functions.expr
+    // the spec session comes from Graft.session, which calls register
+    assert(!spark.experimental.extraOptimizations.contains(HammingZeroAsEquality),
+      "register appended the rule the extension already runs")
+    val docs = Tables.t(spark, sf, "documents").selectExpr("doc_id",
+      "xxhash64(text) AS h")
+    val joined = docs.as("x").join(docs.as("y"),
+      expr("hamming_distance(x.h, y.h) = 0"))
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(!plan.contains("NestedLoopJoin") && !plan.contains("Cartesian"),
+      s"the rule did not fire:\n$plan")
   }
 }

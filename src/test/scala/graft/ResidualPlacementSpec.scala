@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.ResidualJoinPlacement
 import graft.operators.Job
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, EqualTo}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LeafNode, LogicalPlan}
 
@@ -33,37 +34,21 @@ class ResidualPlacementSpec extends SparkSpec {
           } => j
     }
 
-  private def withCbo[A](body: => A): A = {
-    val db = "spark_catalog.default"
-    val before = Seq("spark.sql.cbo.enabled",
-      "spark.sql.cbo.joinReorder.enabled",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      ResidualJoinPlacement.flag).map(k => k -> spark.conf.getOption(k))
+  private def withCbo[A](body: SparkSession => A): A = withSession { spark =>
     try {
-      // same-named TEMP VIEWS from other suites outrank the catalog
-      // tables at resolution — drop them or the unqualified SQL below
-      // plans stat-less and this spec silently stops testing CBO
-      cboTables.foreach(spark.catalog.dropTempView)
       Graft.enableCbo(spark, sf, tables = cboTables)
-      body
+      body(spark)
     } finally {
-      // shared session: other suites pin no-CBO plan shapes; qualified
-      // drops so a bare DROP cannot take a same-named temp view instead
-      cboTables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $db.$t"))
-      before.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) =>
-          if (k.startsWith("spark.sql.cbo")) spark.conf.set(k, "false")
-          else spark.conf.unset(k)
-      }
-      Tables.registerViews(spark, sf) // restore the shared-session views
+      // qualified drops so a bare DROP cannot take a same-named temp
+      // view instead
+      cboTables.foreach(t =>
+        spark.sql(s"DROP TABLE IF EXISTS spark_catalog.default.$t"))
     }
   }
 
   test("under CBO the residual (o1 < o2) join sinks below both lineitem " +
     "fanouts — its subtree scans only orders/customer/nation") {
-    withCbo {
+    withCbo { spark =>
       spark.conf.set(ResidualJoinPlacement.flag, "true")
       val plan = spark.sql(Job.job33aSql).queryExecution.optimizedPlan
       val rjs = residualJoins(plan)
@@ -79,7 +64,7 @@ class ResidualPlacementSpec extends SparkSpec {
 
   test("with the rule disabled the residual joins the two fanned-out " +
     "trees at the top (the r13 geometry the rule exists to fix)") {
-    withCbo {
+    withCbo { spark =>
       spark.conf.set(ResidualJoinPlacement.flag, "false")
       val plan = spark.sql(Job.job33aSql).queryExecution.optimizedPlan
       val rjs = residualJoins(plan)
@@ -92,7 +77,7 @@ class ResidualPlacementSpec extends SparkSpec {
   test("single-side equality + spanning inequality does not fire the rule: " +
     "the equi conjunct must span the join or the sunk join has no hash " +
     "key (ADVICE r14)") {
-    withCbo {
+    withCbo { spark =>
       spark.conf.set(ResidualJoinPlacement.flag, "true")
       // o1.o_orderkey = 32 is a filter, not a key; the only SPANNING
       // conjunct is the inequality — the rule must leave the plan alone
@@ -111,7 +96,7 @@ class ResidualPlacementSpec extends SparkSpec {
   }
 
   test("rule on vs off: identical results (pure reassociation)") {
-    withCbo {
+    withCbo { spark =>
       spark.conf.set(ResidualJoinPlacement.flag, "false")
       val off = spark.sql(Job.job33aSql).collect().toSeq
       spark.conf.set(ResidualJoinPlacement.flag, "true")
@@ -124,16 +109,9 @@ class ResidualPlacementSpec extends SparkSpec {
   test("non-CBO sessions are untouched: with join reorder off the " +
     "optimized plan is identical whatever the rule flag says") {
     // the rule self-gates on spark.sql.cbo.joinReorder.enabled, so a
-    // session that never opted into CBO gets byte-identical plans.
-    // Snapshot + restore both confs (ADVICE r14: leaving the flag at
-    // "false" made later suites that rely on its default-on behavior —
-    // FuzzSpec's residual-placement differential — silently skip the rule
-    // depending on suite order).
-    val prevReorder = spark.conf.getOption("spark.sql.cbo.joinReorder.enabled")
-    val prevFlag = spark.conf.getOption(ResidualJoinPlacement.flag)
-    try {
+    // session that never opted into CBO gets byte-identical plans
+    withSession { spark =>
       spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-      Graft.installResidualPlacement(spark)
       Tables.registerViews(spark, sf)
       spark.conf.set(ResidualJoinPlacement.flag, "true")
       val on = spark.sql(Job.job33aSql).queryExecution.optimizedPlan
@@ -142,19 +120,12 @@ class ResidualPlacementSpec extends SparkSpec {
       assert(on.canonicalized == off.canonicalized,
         s"rule touched a non-CBO plan:\n$on\nvs\n$off")
       assert(residualJoins(on).nonEmpty)
-    } finally {
-      def restore(key: String, prev: Option[String]): Unit = prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      restore("spark.sql.cbo.joinReorder.enabled", prevReorder)
-      restore(ResidualJoinPlacement.flag, prevFlag)
     }
   }
 
   test("equi conjuncts alone (no residual) are never touched: q3 plans " +
     "and answers identically with the rule installed") {
-    withCbo {
+    withCbo { spark =>
       spark.conf.set(ResidualJoinPlacement.flag, "true")
       // q3-shaped pure-equi web over the catalog tables
       val sql = """SELECT o.o_orderkey, sum(l.l_extendedprice) AS rev

@@ -492,7 +492,6 @@ class SimilaritySpec extends SparkSpec {
     // varied-norm embeddings are L2-normalized before indexing (cosine is
     // scale-invariant — the truth is unchanged; the serve becomes exact-
     // objective). l2/ip index the raw vectors.
-    graft.functions.GraftFunctions.register(spark)
     val unitCorpus = corpus.select(col("vec_id"),
       expr("l2_normalize(embedding)").cast("array<float>").as("embedding"))
     val unitQueries = queries.select(col("qid"),

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import graft.streaming.{Event, Streaming}
 import graft.operators.Relational
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -271,19 +271,12 @@ class StreamingSpec extends SparkSpec {
 
   test("st_session_state runs on the RocksDB state store (the 100 TB-grade provider)") {
     import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      runToMemory(Streaming.sessionize(eventStream.as[Event]).toDF(),
+    withRocksDb { spark =>
+      runToMemory(Streaming.sessionize(
+        Tables.eventsStream(spark, streamDir).as[Event]).toDF(),
         "sessions_rocks", "append")
       val rocks = spark.table("sessions_rocks").count()
       assert(rocks > 0, "no sessions emitted under RocksDB state store")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -307,7 +300,7 @@ class StreamingSpec extends SparkSpec {
 
   test("st_user_topk: transformWithState leaderboard equals the batch top-k oracle (RocksDB)") {
     import spark.implicits._
-    withRocksDb {
+    withRocksDb { spark =>
       // chunk by event_id PARITY (not time) so both micro-batches touch
       // nearly every user — the cross-batch ListState merge is the point
       val dir = Paths.get("target/stream_topk_in")
@@ -440,23 +433,19 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
+  /** `body` on a session of its own whose streams keep state in RocksDB
+    * (the provider is read from the session that starts the stream). */
+  private def withRocksDb[T](body: SparkSession => T): T = withSession { spark =>
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    body(spark)
   }
 
   test("st_minhash_dedup state survives the RocksDB provider too") {
     // the bucket-state map must serialize through the 100 TB-grade store,
     // not just the in-memory HDFS-backed default
     val dir = ensureStreamDocs()
-    withRocksDb {
+    withRocksDb { spark =>
       val stream = spark.readStream.schema(docStreamSchema)
         .option("maxFilesPerTrigger", "1").parquet(dir.toAbsolutePath.toString)
       runToMemory(Streaming.minhashDedupStream(stream).toDF(),
@@ -504,7 +493,7 @@ class StreamingSpec extends SparkSpec {
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("ts", TimestampType)))
-    withRocksDb {
+    withRocksDb { spark =>
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir.toAbsolutePath.toString)
       val q = Streaming.minhashDedupStreamTtl(stream).toDF()
@@ -582,10 +571,9 @@ class StreamingSpec extends SparkSpec {
     // case Spark's global-watermark check points at (see the
     // minhashDedupVerdictsTtl Scaladoc for why the late-row semantics are
     // the standard watermarked-dedup contract here)
-    val ccKey = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    val ccPrev = spark.conf.getOption(ccKey)
-    spark.conf.set(ccKey, "false")
-    try withRocksDb {
+    withRocksDb { spark =>
+      spark.conf.set(
+        "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir.toAbsolutePath.toString)
       val q = Streaming.minhashDedupVerdictsTtl(stream).toDF()
@@ -613,9 +601,6 @@ class StreamingSpec extends SparkSpec {
       // both stores drained after the horizon passed
       assert(stateRows.nonEmpty && stateRows.last < stateRows.max / 2,
         s"state not TTL'd across both operators: $stateRows")
-    } finally ccPrev match {
-      case Some(p) => spark.conf.set(ccKey, p)
-      case None => spark.conf.unset(ccKey)
     }
   }
 
@@ -702,10 +687,9 @@ class StreamingSpec extends SparkSpec {
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("ts", TimestampType)))
-    val ccKey = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    val ccPrev = spark.conf.getOption(ccKey)
-    spark.conf.set(ccKey, "false")
-    try withRocksDb {
+    withRocksDb { spark =>
+      spark.conf.set(
+        "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir.toAbsolutePath.toString)
       val q = Streaming.minhashDedupVerdictsTtl(stream).toDF()
@@ -721,9 +705,6 @@ class StreamingSpec extends SparkSpec {
       val perDoc = rows.groupBy(_.getLong(0)).view.mapValues(_.length)
       assert(perDoc.values.forall(_ == 1),
         s"duplicate verdicts: ${perDoc.filter(_._2 > 1).toMap}")
-    } finally ccPrev match {
-      case Some(p) => spark.conf.set(ccKey, p)
-      case None => spark.conf.unset(ccKey)
     }
   }
 
@@ -1036,7 +1017,7 @@ class StreamingSpec extends SparkSpec {
       StructField("event_id", LongType), StructField("ts", TimestampType),
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("value", DoubleType)))
-    def runPass(): Unit = {
+    def runPass(spark: SparkSession): Unit = {
       val q = Streaming.tumblingAgg(
           spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
             .parquet(inDir.toAbsolutePath.toString))
@@ -1047,13 +1028,13 @@ class StreamingSpec extends SparkSpec {
       q.awaitTermination(120000)
       q.stop()
     }
-    withRocksDb {
+    withRocksDb { spark =>
       writeChunk(1); writeChunk(2)
-      runPass() // pass 1: half the stream, then the query is gone
+      runPass(spark) // pass 1: half the stream, then the query is gone
       val afterKill = spark.read.parquet(outDir).count()
       assert(afterKill > 0, "no windows closed before the kill")
       writeChunk(3); writeChunk(4)
-      runPass() // pass 2: SAME checkpoint — must resume, not reprocess
+      runPass(spark) // pass 2: SAME checkpoint — must resume, not reprocess
       val sink = spark.read.parquet(outDir)
       assert(sink.count() > afterKill, "restart emitted nothing new")
       // exactly-once across the restart: every (hour, type) window at most once
