@@ -9,6 +9,9 @@
 #   SPARK_DRIVER_MEM≈64g and a data-sized shuffle width, both defaulted
 #   below per SURVEY §1's spill rule; see JobAudit's note)
 #
+# SPARK_GRAFT_QUERIES (comma-separated entry names) replaces the default
+# query list, e.g. SPARK_GRAFT_QUERIES=d_cluster,p_token_budget.
+#
 # Interpretation: compare per-query mins against the sf0.1 table in
 # BASELINE.md. A heavy operator reading ≥ multiplier× its sf0.1 wall has
 # flipped to a super-linear shape (driver-side collect, single-partition
@@ -29,7 +32,7 @@ sbt -batch "runMain graft.ScaleGen $DIR $MULT"
 
 SPARK_GRAFT_SF_DIR="$DIR" \
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-SPARK_GRAFT_QUERIES="d_exact,d_minhash,d_ngram_jaccard,d_cluster,n_ivfpq_topk,p_e2e,cb_h2o_gb,x_repetition" \
+SPARK_GRAFT_QUERIES="${SPARK_GRAFT_QUERIES:-d_exact,d_minhash,d_ngram_jaccard,d_cluster,n_ivfpq_topk,p_e2e,p_token_budget,cb_h2o_gb,x_repetition}" \
 SPARK_GRAFT_BENCH_OUT="$OUT" \
   sbt -batch "runMain graft.Bench"
 

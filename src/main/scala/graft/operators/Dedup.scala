@@ -896,15 +896,39 @@ object Dedup {
     * checksum), not a collect. At the fixpoint every edge is (node,
     * component-min), so labels fall straight out of the edge list.
     *
+    * Driver finish: the same scalar counts the current edges. Once that
+    * count × 16 B (two longs) is within `spark.sql.autoBroadcastJoinThreshold`
+    * — the session's existing bound on what the driver may collect and
+    * ship — the loop stops contracting, collects the edges and finishes
+    * with a union-find that always links the larger root under the smaller
+    * one, so every root is its component's minimum: the label the fixpoint
+    * gives. The check runs before the first round and after every round, so
+    * a large graph contracts on the cluster until what remains fits, and a
+    * small one (d_cluster's pair graph at sf0.1) runs no round at all and
+    * holds no per-round localCheckpoint. A threshold of -1 turns the
+    * driver finish off. `maxIter` bounds only the distributed rounds: a
+    * graph that neither converges nor fits within them throws.
+    *
     * 100 TB shape: the edge list holds ONLY docs that appear in some
     * near-dup pair (a small fraction of the corpus); each round is two
-    * groupBy-min + equi-join passes over edges — no global structure, no
-    * driver-side graph. Skewed mega-components (100 TB boilerplate) are
-    * exactly what the large-star step splits: a node's larger neighbors
-    * re-attach to the component min, so hub degree halves per round.
-    * `localCheckpoint` each round truncates the otherwise-doubling lineage
-    * (each round's plan references the last round's twice). */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 15): DataFrame = {
+    * groupBy-min + equi-join passes over edges — no global structure, and a
+    * driver-side graph only once it is broadcast-sized. Skewed
+    * mega-components (100 TB boilerplate) are exactly what the large-star
+    * step splits: a node's larger neighbors re-attach to the component min,
+    * so hub degree halves per round. `localCheckpoint` each round truncates
+    * the otherwise-doubling lineage (each round's plan references the last
+    * round's twice). */
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 15): DataFrame =
+    components(pairs, maxIter).labels
+
+  /** A [[connectedComponents]] run: its (doc_id, cluster_id) rows, the
+    * distributed contraction rounds it took, and whether the union-find on
+    * the driver finished it. */
+  private[graft] case class Components(labels: DataFrame, rounds: Int,
+      finishedOnDriver: Boolean)
+
+  private[graft] def components(pairs: DataFrame, maxIter: Int): Components = {
+    val spark = pairs.sparkSession
     // LAZY localCheckpoint everywhere: the per-round checksum (the
     // convergence test, which must run anyway) is the action that
     // materializes each checkpoint — one Spark job per round, not two
@@ -924,12 +948,14 @@ object Dedup {
       val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
+    val driverBytes = spark.sessionState.conf.autoBroadcastJoinThreshold
+    def fitsDriver(nEdges: Long): Boolean =
+      driverBytes >= 0 && nEdges <= driverBytes / 16
     // a localCheckpoint's blocks are freed only when its RDD is GC'd —
     // without explicit release a 10-round run holds 10 materialized edge
     // sets concurrently; drop each superseded round as soon as the next one
     // is materialized (`raw` stays: `nodes` still reads it at the end, and
     // round-0 `edges` is a derived view of it, hence the iter > 0 guard)
-    def releaseCheckpoint(df: DataFrame): Unit = Checkpoints.release(df)
     var sig = checksum(edges)
     var iter = 0
     var converged = false
@@ -942,21 +968,62 @@ object Dedup {
     // storms) — the duplicated upstream work costs more than the saved
     // job submissions, and an eager intermediate checkpoint would BE the
     // per-round action again. Details in BASELINE.md r7.
-    while (!converged && iter < maxIter) {
+    while (!converged && !fitsDriver(sig._1) && iter < maxIter) {
       val next = contractionRound(edges).localCheckpoint(eager = false)
       val nextSig = checksum(next)
-      if (iter > 0) releaseCheckpoint(edges)
+      if (iter > 0) Checkpoints.release(edges)
       converged = nextSig == sig
       sig = nextSig
       edges = next
       iter += 1
     }
-    if (!converged) throw new IllegalStateException(
+    val onDriver = !converged && fitsDriver(sig._1)
+    if (!converged && !onDriver) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIter rounds " +
         s"(${sig._1} edges remain) — raise maxIter; labels would be wrong")
-    // fixpoint edges are (node, component-min); isolated minima label themselves
-    nodes.join(edges.withColumnRenamed("u", "id"), Seq("id"), "left")
+    // fixpoint edges are (node, component-min); so are the driver's labels
+    val minEdges = if (!onDriver) edges else {
+      val local = edges.collect()
+      if (iter > 0) Checkpoints.release(edges)
+      import spark.implicits._
+      unionFindLabels(local.map(_.getLong(0)), local.map(_.getLong(1)))
+        .toSeq.toDF("u", "v")
+    }
+    // isolated minima label themselves
+    val labels = nodes.join(minEdges.withColumnRenamed("u", "id"), Seq("id"), "left")
       .select(col("id").as("doc_id"), coalesce(col("v"), col("id")).as("cluster_id"))
+    Components(labels, iter, onDriver)
+  }
+
+  /** (node, component minimum) for every non-minimum node of the graph with
+    * edges (us(i), vs(i)). Nodes are indexed by rank in the sorted id
+    * array, and a union always links the larger-ranked root under the
+    * smaller one, so each root is its component's minimum id. */
+  private def unionFindLabels(us: Array[Long], vs: Array[Long])
+      : Array[(Long, Long)] = {
+    val all = new Array[Long](us.length + vs.length)
+    System.arraycopy(us, 0, all, 0, us.length)
+    System.arraycopy(vs, 0, all, us.length, vs.length)
+    java.util.Arrays.sort(all)
+    var n = 0
+    for (i <- all.indices) if (n == 0 || all(i) != all(n - 1)) {
+      all(n) = all(i); n += 1
+    }
+    val ids = java.util.Arrays.copyOf(all, n)
+    val parent = Array.tabulate(n)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (i <- us.indices) {
+      val a = find(java.util.Arrays.binarySearch(ids, us(i)))
+      val b = find(java.util.Arrays.binarySearch(ids, vs(i)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    (0 until n).iterator.map(i => i -> find(i)).collect {
+      case (i, r) if r != i => ids(i) -> ids(r)
+    }.toArray
   }
 
   /** Near-dup clusters from the minhash pipeline: each doc that has any
@@ -964,7 +1031,9 @@ object Dedup {
     * component), plus per-cluster size — the "keep cluster_id, drop the
     * rest" dedup decision. Rows-only (hash pipeline); DedupSpec asserts the
     * planted chain collapses into one cluster and labels are component
-    * minima. */
+    * minima. A broadcast-sized pair graph (sf0.1's included) is labeled by
+    * the driver union-find with no contraction round; a larger one
+    * contracts on the cluster until it fits ([[connectedComponents]]). */
   def dCluster(spark: SparkSession, dir: String): DataFrame = {
     val pairs = minhashLshPairs(
       wordShingleSets(withPlantedNear(docs(spark, dir))), 0.5)

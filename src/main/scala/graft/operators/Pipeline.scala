@@ -145,7 +145,7 @@ object Pipeline {
     * length) still splits. `spark_partition_id()` then names the slice.
     * Level 1 windows the running sum within (source, bucket) — B-bounded
     * partitions; level 2 cumulates per-(source, bucket) totals over the
-    * BUCKET SUMMARY (≤ #buckets rows, never the corpus) and broadcasts the
+    * BUCKET SUMMARY (≤ slices rows, never the corpus) and broadcasts the
     * offsets back. cum_toks = bucket_offset + within_bucket_cum is exact for
     * ANY contiguous slicing, so run-to-run variation in sampled boundaries
     * cannot change the output and the DuckDB oracle (the naive per-source
@@ -162,11 +162,19 @@ object Pipeline {
     * read the checkpointed (doc_id, source, toks, bucket) slice — 32 B/row,
     * ~320 GB at 10^10 docs, the price of making the bucketing a fact rather
     * than a plan coincidence (same pattern d_cluster uses per contraction
-    * round). */
-  val TokenBudgetBuckets = 64
-
-  /** Pre-checkpoint bucketing fragment, exposed for PlanAuditSpec (the
-    * checkpoint boundary hides the range exchange from the main plan). */
+    * round).
+    *
+    * Slice count: the range exchange takes `spark.sql.shuffle.partitions`
+    * and AQE coalesces adjacent slices to its advisory size. A coalesced
+    * slice is a run of adjacent range slices, so it is still one contiguous
+    * range of (source, toks DESC, doc_id) and the decomposition above stays
+    * exact. A few thousand documents make one slice instead of a fixed 64
+    * that put 64 tasks in every later stage, and at 10^10 documents the
+    * slices are byte-bounded.
+    *
+    * `tokenBudgetParted` is the pre-checkpoint bucketing fragment, exposed
+    * for PlanAuditSpec (the checkpoint boundary hides the range exchange
+    * from the main plan). */
   def tokenBudgetParted(spark: SparkSession, dir: String): DataFrame =
     tokenBudgetPartedOn(Tables.t(spark, dir, "documents"))
 
@@ -174,8 +182,7 @@ object Pipeline {
     docs
       .select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).as("toks"))
-      .repartitionByRange(TokenBudgetBuckets,
-        asc("source"), desc("toks"), asc("doc_id"))
+      .repartitionByRange(asc("source"), desc("toks"), asc("doc_id"))
       .withColumn("bucket", spark_partition_id())
 
   def pTokenBudget(spark: SparkSession, dir: String): DataFrame = {

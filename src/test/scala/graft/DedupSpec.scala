@@ -7,6 +7,18 @@ import org.apache.spark.sql.functions._
   * recall, and reported pairs must be genuinely similar (precision). */
 class DedupSpec extends SparkSpec {
 
+  /** Run `body` on an isolated session whose driver finish is off, so
+    * `connectedComponents` labels through the distributed contraction
+    * rounds however small the graph. */
+  private def distributed[A](body: org.apache.spark.sql.SparkSession => A): A =
+    withSession { s =>
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      body(s)
+    }
+
+  private def labelMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   private def plantedNearPairs: Long =
     Tables.t(spark, sf, "documents").filter(col("doc_id") % 10 === 0).count()
 
@@ -137,21 +149,24 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connectedComponents collapses a transitive near-dup chain into one cluster") {
-    import spark.implicits._
-    // v0 ≈ v1 (drop 2 words), v1 ≈ v2 (drop 2 more): v0–v2 may fall below
-    // the pairwise threshold, so only transitivity groups all three
-    val words = (1 to 40).map(i => s"tok$i").mkString(" ")
-    val chain = Seq(
-      (10L, words),
-      (11L, words.split(" ").drop(2).mkString(" ")),
-      (12L, words.split(" ").drop(4).mkString(" ")),
-      (99L, (1 to 40).map(i => s"other$i").mkString(" ")))
-      .toDF("doc_id", "text")
-    val pairs = Dedup.minhashLshPairs(Dedup.wordShingleSets(chain), 0.5)
-    val cc = Dedup.connectedComponents(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cc.keySet == Set(10L, 11L, 12L), s"unexpected nodes: $cc")
-    assert(cc.values.toSet == Set(10L), s"labels must be the component min: $cc")
+    distributed { s =>
+      import s.implicits._
+      // v0 ≈ v1 (drop 2 words), v1 ≈ v2 (drop 2 more): v0–v2 may fall below
+      // the pairwise threshold, so only transitivity groups all three
+      val words = (1 to 40).map(i => s"tok$i").mkString(" ")
+      val chain = Seq(
+        (10L, words),
+        (11L, words.split(" ").drop(2).mkString(" ")),
+        (12L, words.split(" ").drop(4).mkString(" ")),
+        (99L, (1 to 40).map(i => s"other$i").mkString(" ")))
+        .toDF("doc_id", "text")
+      val pairs = Dedup.minhashLshPairs(Dedup.wordShingleSets(chain), 0.5)
+      val run = Dedup.components(pairs, maxIter = 15)
+      assert(!run.finishedOnDriver && run.rounds >= 1)
+      val cc = labelMap(run.labels)
+      assert(cc.keySet == Set(10L, 11L, 12L), s"unexpected nodes: $cc")
+      assert(cc.values.toSet == Set(10L), s"labels must be the component min: $cc")
+    }
   }
 
   test("d_incremental admits only genuinely new content, min id per batch dup") {
@@ -172,36 +187,104 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connectedComponents labels a 200-node chain in O(log n) rounds") {
-    import spark.implicits._
-    // a path graph is the worst case for label propagation (diameter = n);
-    // star contraction must collapse it well inside the default maxIter=15
-    // (log-rounds), and label every node with the component min
-    val chain = (0L until 199L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val cc = Dedup.connectedComponents(chain)
-    assert(cc.count() == 200)
-    assert(cc.filter(col("cluster_id") =!= 0L).count() == 0,
-      "every chain node must carry the component minimum 0")
+    distributed { s =>
+      import s.implicits._
+      // a path graph is the worst case for label propagation (diameter = n);
+      // star contraction must collapse it well inside the default maxIter=15
+      // (log-rounds), and label every node with the component min
+      val chain = (0L until 199L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+      val run = Dedup.components(chain, maxIter = 15)
+      assert(!run.finishedOnDriver && run.rounds >= 1)
+      val cc = run.labels
+      assert(cc.count() == 200)
+      assert(cc.filter(col("cluster_id") =!= 0L).count() == 0,
+        "every chain node must carry the component minimum 0")
+    }
   }
 
   test("connectedComponents throws loudly instead of mislabeling on non-convergence") {
-    import spark.implicits._
-    val chain = (0L until 99L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, maxIter = 1).count()
+    distributed { s =>
+      import s.implicits._
+      val chain = (0L until 99L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+      val e = intercept[IllegalStateException] {
+        Dedup.connectedComponents(chain, maxIter = 1).count()
+      }
+      assert(e.getMessage.contains("did not converge"))
     }
-    assert(e.getMessage.contains("did not converge"))
   }
 
   test("connectedComponents handles multiple components and self-pairs") {
-    import spark.implicits._
-    val pairs = Seq((5L, 3L), (3L, 9L), (20L, 21L), (30L, 30L))
-      .toDF("doc_a", "doc_b")
-    val cc = Dedup.connectedComponents(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // 30 appears only in a self-pair: it is its own singleton component and
-    // must still be labeled (with itself), not dropped (ADVICE r4)
-    assert(cc == Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 20L -> 20L, 21L -> 20L,
-      30L -> 30L), s"got $cc")
+    // must still be labeled (with itself), not dropped (ADVICE r4) — on the
+    // distributed rounds and on the driver finish alike
+    val want = Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 20L -> 20L, 21L -> 20L,
+      30L -> 30L)
+    val pairs = Seq((5L, 3L), (3L, 9L), (20L, 21L), (30L, 30L))
+    distributed { s =>
+      import s.implicits._
+      val run = Dedup.components(pairs.toDF("doc_a", "doc_b"), maxIter = 15)
+      assert(!run.finishedOnDriver && run.rounds >= 1)
+      assert(labelMap(run.labels) == want, s"got ${labelMap(run.labels)}")
+    }
+    import spark.implicits._
+    val run = Dedup.components(pairs.toDF("doc_a", "doc_b"), maxIter = 15)
+    assert(run.finishedOnDriver && run.rounds == 0)
+    assert(labelMap(run.labels) == want, s"got ${labelMap(run.labels)}")
+  }
+
+  test("connectedComponents: the driver finish and the forced-distributed " +
+      "rounds give identical labels on random graphs") {
+    // self-pairs, duplicate pairs and both orientations of an edge; graphs
+    // from sparse (many small components) to dense (one giant component)
+    val rnd = new scala.util.Random(7)
+    for (trial <- 1 to 6) {
+      val n = 20 + trial * 15
+      val m = trial * 25
+      val base = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      val pairs = base ++ base.take(m / 4).map(_.swap) ++ base.take(m / 8) ++
+        Seq.fill(3) { val d = rnd.nextInt(n).toLong; (d, d) }
+      import spark.implicits._
+      val onDriver = Dedup.components(pairs.toDF("doc_a", "doc_b"), 15)
+      assert(onDriver.finishedOnDriver && onDriver.rounds == 0)
+      val driverLabels = labelMap(onDriver.labels)
+      val clusterLabels = distributed { s =>
+        import s.implicits._
+        val run = Dedup.components(pairs.toDF("doc_a", "doc_b"), 15)
+        assert(!run.finishedOnDriver)
+        labelMap(run.labels)
+      }
+      assert(driverLabels == clusterLabels,
+        s"trial $trial: labels diverge on " +
+          (driverLabels.keySet ++ clusterLabels.keySet)
+            .filter(k => driverLabels.get(k) != clusterLabels.get(k)))
+      assert(driverLabels.keySet == pairs.flatMap(p => Seq(p._1, p._2)).toSet)
+    }
+  }
+
+  test("connectedComponents hands off to the driver once a contraction " +
+      "round brings the edge list within the bound") {
+    import spark.implicits._
+    // a dense graph (60 nodes, 300 pairs) that one contraction round
+    // shrinks toward a star; the bound is set to the round-1 edge list's
+    // size, so round 0 does not fit and round 1 does
+    val rnd = new scala.util.Random(11)
+    val pairs = Seq.fill(300)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+    val edges0 = pairs.toDF("u", "v").filter(col("u") =!= col("v"))
+    val n0 = edges0.count()
+    val n1 = Dedup.contractionRound(edges0).count()
+    assert(n1 < n0, s"round 1 did not shrink the edge list ($n0 → $n1)")
+    val want = distributed { s =>
+      import s.implicits._
+      labelMap(Dedup.connectedComponents(pairs.toDF("doc_a", "doc_b")))
+    }
+    withSession { s =>
+      import s.implicits._
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", (n1 * 16).toString)
+      val run = Dedup.components(pairs.toDF("doc_a", "doc_b"), 15)
+      assert(run.finishedOnDriver && run.rounds == 1,
+        s"finished on driver: ${run.finishedOnDriver} after ${run.rounds} rounds")
+      assert(labelMap(run.labels) == want)
+    }
   }
 
   test("d_lines keeps the planted cross-doc boilerplate line in exactly one document") {

@@ -344,7 +344,7 @@ class PlanAuditSpec extends SparkSpec {
       s"range slice not on the priority order:\n$pp")
     // ...and the main plan must window the corpus only WITHIN (source,
     // bucket); the sole source-partitioned window is over the bucket
-    // summary (an aggregate, ≤ TokenBudgetBuckets rows), with the offsets
+    // summary (an aggregate, ≤ slices rows), with the offsets
     // coming back via broadcast, never a corpus reshuffle
     val df = graft.operators.Pipeline.pTokenBudget(spark, sf)
     df.collect()
@@ -363,6 +363,47 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(p.contains("BroadcastHashJoin"),
       s"bucket offsets not broadcast back:\n$p")
+  }
+
+  test("p_token_budget: AQE-sized slices — identical rows at shuffle " +
+      "widths 1, 3 and 64") {
+    // the range exchange takes the session's shuffle width and AQE
+    // coalesces adjacent slices; every slicing is contiguous in the
+    // priority order, so cum_toks (and the admitted rows) cannot move.
+    // Coalescing is switched off at widths 3 and 64 so those runs really
+    // cut 3 and 64 slices; the last run lets AQE coalesce the 64.
+    import graft.operators.Pipeline
+    def run(width: Int, coalesce: Boolean) = withSession { s =>
+      s.conf.set("spark.sql.shuffle.partitions", width.toString)
+      s.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
+        coalesce.toString)
+      val slices = Pipeline.tokenBudgetParted(s, sf01)
+        .select("bucket").distinct().count()
+      (slices, Pipeline.pTokenBudget(s, sf01).collect().toSeq)
+    }
+    val (s1, one) = run(1, coalesce = true)
+    val (s3, three) = run(3, coalesce = false)
+    val (s64, sixtyFour) = run(64, coalesce = false)
+    val (sAqe, coalesced) = run(64, coalesce = true)
+    assert(s1 == 1 && s3 == 3 && s64 > 3 && sAqe < s64,
+      s"slices: width 1 → $s1, 3 → $s3, 64 → $s64, 64 coalesced → $sAqe")
+    assert(one.nonEmpty)
+    assert(three == one && sixtyFour == one && coalesced == one)
+  }
+
+  test("connectedComponents over a small pair frame runs no contraction " +
+      "round — its broadcast-sized edge list is labeled on the driver") {
+    import spark.implicits._
+    val pairs = Seq((5L, 3L), (3L, 9L), (20L, 21L), (9L, 12L), (30L, 30L))
+      .toDF("doc_a", "doc_b")
+    // construction runs the round-0 edge count (an aggregate: its shuffle
+    // map stage and its result, 2 jobs) and the edge collect (1); every
+    // contraction round would add its exchanges and its own count
+    val (labels, jobs) = jobsDuring(Dedup.connectedComponents(pairs))
+    assert(jobs == 3, s"building the components ran $jobs Spark jobs")
+    assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 12L -> 3L, 20L -> 20L, 21L -> 20L,
+        30L -> 30L))
   }
 
   test("x_boilerplate: count-distinct is partial-aggregated before the shuffle") {
