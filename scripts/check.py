@@ -17,6 +17,12 @@ def load(con, sfdir):
         name = os.path.basename(f)[:-8]
         con.execute(f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM read_parquet('{f}')")
 
+def read_spark(path):
+    """A Spark result. Spark writes timestamps as parquet INT96, which pandas
+    reads at ns precision by default and wraps past 2262-04-11 (2300-01-01
+    reads back as 1715-06-13); read them at µs, the unit DuckDB returns."""
+    return pd.read_parquet(path, coerce_int96_timestamp_unit="us")
+
 def norm(df):
     import datetime
     import numpy as np
@@ -64,7 +70,7 @@ def main():
     n_pass = n_fail = 0
     for name in sorted(oracle):
         try:
-            spark_df = norm(pd.read_parquet(f"{outdir}/{name}"))
+            spark_df = norm(read_spark(f"{outdir}/{name}"))
             duck_df = norm(con.execute(oracle[name]).fetchdf())
             ok = True; msgs = []
             if list(spark_df.columns) != list(duck_df.columns):
@@ -111,7 +117,7 @@ def main():
         name = os.path.basename(d.rstrip('/'))
         if name not in oracle:
             try:
-                n = len(pd.read_parquet(d))
+                n = len(read_spark(d))
                 print(f"ROWS-ONLY {name}: {n} rows" + (" (EMPTY!)" if n == 0 else ""))
             except Exception as e:
                 print(f"ROWS-ONLY {name}: unreadable: {e}")

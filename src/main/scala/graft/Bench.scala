@@ -28,7 +28,7 @@ object Bench {
     // third two-level-scan member, RRF fusion (BASELINE.md r9 records
     // the 21-query shared subset for round-over-round comparison)
     "e_hopping", "d_soft", "p_curriculum", "n_rrf_hybrid",
-    // round 11: the production-shaped IVF config (kernel assignment path)
+    // round 11: the production-shaped IVF config (a 64-cell model)
     // and the incremental-dedup delta entry
     "n_ivf_big", "d_minhash_delta")
 

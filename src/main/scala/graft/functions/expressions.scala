@@ -898,18 +898,18 @@ object PqScore {
 }
 
 /** `nearest_centroid(vec, cents, cells[, metric])` — argmax cell
-  * assignment for IVF-family coarse quantizers at PRODUCTION cell counts:
-  * `cents` is the centroid model flattened cell-major (cents[cell*d + j],
-  * d implied by length/cells), the result is the index of the best-scoring
-  * centroid under `metric` (0 = cosine, the default; 1 = L2, argMIN
-  * distance; 2 = inner product, argMAX dot), ties to the HIGHEST index —
-  * bit-identical semantics (double-promoted accumulation, zero-norm → 0.0
-  * under cosine, tie order) to the inline greatest(struct(score…)) chain
-  * Similarity.assignTo uses below its cell threshold. The inline chain
-  * inlines one expression per cell and exceeds JVM codegen limits at the
-  * √n cells a large corpus wants (VERDICT r10); this is one fused cells×d
-  * loop in generated code — cell count changes a loop bound, not the
-  * expression tree. */
+  * assignment for IVF-family coarse quantizers, the one corpus-to-cell
+  * assignment Similarity.assignTo runs at every model size: `cents` is the
+  * centroid model flattened cell-major (cents[cell*d + j], d implied by
+  * length/cells), the result is the index of the best-scoring centroid
+  * under `metric` (0 = cosine, the default; 1 = L2, argMIN distance;
+  * 2 = inner product, argMAX dot), ties to the HIGHEST index. Per-cell
+  * scores are the scalar `cosine_similarity` / `-l2_distance` /
+  * `inner_product` math (double-promoted accumulation, pairwise
+  * min-length, zero-norm → 0.0 under cosine). One inlined expression per
+  * cell would exceed JVM codegen limits at the √n cells a large corpus
+  * wants (VERDICT r10); this is one fused cells×d loop in generated code —
+  * cell count changes a loop bound, not the expression tree. */
 case class NearestCentroid(vec: Expression, cents: Expression,
     cells: Expression, metric: Expression)
     extends QuaternaryExpression {
@@ -989,7 +989,7 @@ object NearestCentroid {
         case VecMetric.Ip => dot
         case _ => if (nx == 0.0 || ny == 0.0) 0.0 else dot / math.sqrt(nx * ny)
       }
-      // >= : ties take the highest cell, matching greatest(struct(s, c))
+      // >= : ties take the highest cell
       if (s >= bestScore) { bestScore = s; best = cell }
       cell += 1
     }

@@ -56,17 +56,10 @@ object Similarity {
   val LshMaxHamming = 2
   val IvfCells = 16
   val IvfNprobe = 3
-  /** Above this many centroids, [[assignTo]] switches from the inline
-    * greatest()-chain (one expression per cell — exceeds JVM codegen
-    * limits at production cell counts) to the native `nearest_centroid`
-    * kernel, where cell count is a loop bound (VERDICT r10). 16 keeps the
-    * default config on its long-audited inline plan; both paths are
-    * equality-tested in SimilaritySpec. */
-  val AssignInlineMaxCells = 16
   /** The production-shaped IVF config the n_ivf_big gate entry exercises:
-    * past the inline-assignment threshold, so the driver gate covers the
-    * kernel path, not just the 16-cell toy (VERDICT r10 #7). Sizing rule
-    * unchanged (cells ≈ √n, nprobe sets the scanned fraction). */
+    * 4× the default cells, so the Verify gate covers a model past the
+    * 16-cell toy (VERDICT r10 #7). Sizing rule unchanged (cells ≈ √n,
+    * nprobe sets the scanned fraction). */
   val BigIvfCells = 64
   val BigIvfNprobe = 8
 
@@ -259,17 +252,6 @@ object Similarity {
     * 5–25 on a corpus SAMPLE, then one final full-corpus assignment. */
   val QuantIters = 1
 
-  /** Materialize a tiny trained-model frame (centroids / codebooks) into a
-    * LocalRelation. The collected rows are MODEL parameters — ≤ cells×dims
-    * values, ~KBs, the same thing MLlib's KMeansModel holds on the driver —
-    * never corpus data. Compared to round 4's persist() this (a) cannot
-    * leak cache entries (ADVICE r4: pqCodebooks was never unpersisted),
-    * (b) truncates the per-Lloyd-iteration lineage so iterated training
-    * does not double its plan each round, and (c) broadcasts for free as a
-    * LocalRelation. */
-  private def localizeModel(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(df.collectAsList(), df.schema)
-
   /** Coarse quantizer seeds: the `cells` lowest-id vectors act as centroids
     * (a deterministic sample — IVF training normally samples the corpus).
     * Order-independent derivation (ADVICE r11): orderBy(vec_id).limit —
@@ -277,10 +259,6 @@ object Similarity {
     * spaces seed correctly; cell ids are densified 0..cells-1 by rank. The
     * window runs over `cells` rows post-limit — model-sized, never the
     * corpus. */
-  private def centroids(spark: SparkSession, dir: String,
-      cells: Int = IvfCells): DataFrame =
-    centroidsOn(emb(spark, dir), cells)
-
   private def centroidsOn(vecs: DataFrame, cells: Int): DataFrame =
     // summaryKey: the frame is the ≤`cells`-row MODEL seed (limit above),
     // so one partition is the design; the non-foldable key keeps
@@ -294,55 +272,51 @@ object Similarity {
         .orderBy("vec_id")) - 1).as("cell"),
         col("embedding").as("cv"))
 
+  /** A centroid model in the IVF kernels' layout; see [[cellModel]]. */
+  private final class CellModel(val cells: Int, val flat: Column,
+      ids: Seq[Int]) {
+    /** The cell id of a kernel's centroid index. */
+    def cellAt(idx: Column): Column = element_at(typedLit(ids), idx + 1)
+  }
+
+  /** Collect `cents` (cell, cv) into the layout the IVF kernels
+    * (`nearest_centroid`, `top_cells`) read — the one place it is decided.
+    * The rows are MODEL values (≤ cells × dims floats), never corpus rows.
+    * They are sorted by cell and flattened cell-major into one array
+    * literal (`flat(i * d + j)` is dimension j of the i-th cell), so kernel
+    * index order is cell order and a kernel's tie order over indices is
+    * the same order over cell ids. */
+  private def cellModel(cents: DataFrame): CellModel = {
+    val sorted = cents.select(col("cell"), col("cv")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
+    require(sorted.nonEmpty, "ivf needs a non-empty centroid model")
+    val d = sorted.head._2.length
+    require(sorted.forall(_._2.length == d),
+      "centroid model is ragged — all cells must share one dimension")
+    new CellModel(sorted.length, typedLit(sorted.flatMap(_._2).toSeq),
+      sorted.map(_._1).toSeq)
+  }
+
   /** Nearest-centroid assignment of the corpus to `cents` (cell, cv) as a
-    * PER-ROW argmax expression: the centroids are MODEL values (≤
-    * cells × dims floats, the same thing [[localizeModel]] already holds),
-    * so they inline as literals and the whole assignment is a codegen'd
-    * when-chain of `cosine_similarity` calls — narrow, ZERO shuffle. The
-    * round-5 crossJoin + groupBy(vec_id) + max_by form partial-aggregated
-    * map-side but still EXCHANGED every (vec_id, embedding) row for its
-    * final aggregate — a full-corpus embedding shuffle in the index-BUILD
-    * path, the single heaviest avoidable movement at 100 TB (plan audit
-    * now pins the no-Exchange shape). Two spellings by model size, both
-    * narrow and codegen'd (VERDICT r10 #1):
-    *  - ≤ [[AssignInlineMaxCells]]: one `greatest()` over (score, cell)
-    *    structs — each child evaluated once, linear tree (a folded
-    *    when-chain would reference its accumulator twice per level:
-    *    2^cells expression blowup). Ties take the HIGHEST cell
-    *    (deterministic struct order; max_by's tie order was
-    *    engine-internal).
-    *  - above it: the native `nearest_centroid` kernel over the
-    *    cell-major-flattened model — the inline chain inlines one
-    *    cosine expression per cell and trips JVM codegen limits at the
-    *    √n ≈ tens-of-thousands cells a 1B-vector corpus wants; the kernel
-    *    makes cell count a LOOP BOUND. Same double-promoted math, same
-    *    ties-to-highest-cell order (equality-tested in SimilaritySpec). */
+    * PER-ROW argmax: one native `nearest_centroid` call per corpus row over
+    * the flattened model ([[cellModel]]) — narrow, codegen'd, ZERO
+    * shuffle. The round-5 crossJoin + groupBy(vec_id) + max_by form
+    * partial-aggregated map-side but still EXCHANGED every
+    * (vec_id, embedding) row for its final aggregate — a full-corpus
+    * embedding shuffle in the index-BUILD path, the single heaviest
+    * avoidable movement at 100 TB (plan audit pins the no-Exchange shape).
+    * Cell count is the kernel's loop bound, not a size of the expression
+    * tree, so one spelling serves 16 cells and the √n ≈ tens of thousands
+    * a 1B-vector corpus wants, where one inlined expression per cell
+    * would trip JVM codegen limits (VERDICT r10 #1). Ties take the HIGHEST
+    * cell. */
   private[graft] def assignTo(corpus: DataFrame, cents: DataFrame,
-      inlineMaxCells: Int = AssignInlineMaxCells,
       metric: String = "cosine"): DataFrame = {
-    val model = cents.select(col("cell"), col("cv")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1)))
-    require(model.length >= 2, s"centroid model too small: ${model.length}")
-    val best =
-      if (model.length <= inlineMaxCells)
-        greatest(model.map { case (cell, cv) =>
-          struct(scoreCol(metric, col("embedding"), typedLit(cv)).as("s"),
-            lit(cell).as("c"))
-        }: _*).getField("c")
-      else {
-        val sorted = model.sortBy(_._1)
-        val d = sorted.head._2.length
-        require(sorted.forall(_._2.length == d),
-          "centroid model is ragged — all cells must share one dimension")
-        // kernel returns the argmax INDEX over the flattened model; the
-        // ascending sort makes index order = cell order, so ties-to-
-        // highest-index is ties-to-highest-cell, like the inline form
-        val idx = call_function("nearest_centroid", col("embedding"),
-          typedLit(sorted.flatMap(_._2).toSeq), lit(sorted.length),
-          lit(metricId(metric)))
-        element_at(typedLit(sorted.map(_._1).toSeq), idx + 1)
-      }
-    corpus.select(col("vec_id"), col("embedding"), best.as("cell"))
+    val m = cellModel(cents)
+    require(m.cells >= 2, s"centroid model too small: ${m.cells}")
+    val idx = call_function("nearest_centroid", col("embedding"), m.flat,
+      lit(m.cells), lit(metricId(metric)))
+    corpus.select(col("vec_id"), col("embedding"), m.cellAt(idx).as("cell"))
   }
 
   /** One Lloyd refinement: each cell's centroid becomes the per-dimension
@@ -368,8 +342,11 @@ object Similarity {
 
   /** Sample centroids → `iters` Lloyd refinements (see [[QuantIters]]), each
     * one corpus pass. The trained quantizer comes back as a LocalRelation
-    * (see [[localizeModel]]) so corpus assignment and query-side probing
-    * share one materialized model with no cache entry to leak. Lloyd
+    * of MODEL values (≤ cells × dims floats, what MLlib's KMeansModel
+    * holds on the driver), so corpus assignment and query-side probing
+    * share one materialized model: unlike round 4's persist() it cannot
+    * leak a cache entry (ADVICE r4), and each Lloyd step's lineage stops
+    * at the model instead of doubling the plan per round. Lloyd
     * empty-cell rule: a cell that captured no vectors keeps its previous
     * centroid — the quantizer always has exactly `cells` rows, so cell ids
     * never misalign downstream (ADVICE r4).
@@ -454,8 +431,8 @@ object Similarity {
   /** Frame-based probe selection: queries are any (qid, qv) frame.
     *
     * One `top_cells` kernel call per query row (round 18): the centroids
-    * ride as a single flattened array literal (the layout [[assignTo]]'s
-    * `nearest_centroid` already uses), the kernel returns the nprobe
+    * ride as a single flattened array literal ([[cellModel]], the layout
+    * [[assignTo]]'s `nearest_centroid` reads), the kernel returns the nprobe
     * best-scoring cell INDICES ranked (score desc, cell asc), and
     * `explode` + an id lookup emit (qid, qv, cell) — zero shuffle, zero
     * Window, at ANY model size, and the expression tree is three nodes.
@@ -465,31 +442,23 @@ object Similarity {
     * `least`-selection chain removed the exchange but built an
     * nprobe × cells expression tree per serve call whose driver-side
     * construction + analysis cost ~250 ms at 16 cells (the n_ivf_serve
-    * 0.72× local regression, VERDICT r17 #3) and which still needed the
-    * crossJoin fallback past [[AssignInlineMaxCells]]. The kernel's cell
-    * count changes a loop bound, not the tree, so the fallback is gone.
-    * Ascending cell sort makes kernel index order = cell order, so
-    * ties-to-lowest-index = ties-to-lowest-cell — the window's
-    * (score desc, cell asc), ties included; NaN scores rank first like
-    * the window sort (fixes ADVICE r17's -1-sentinel divergence). */
+    * 0.72× local regression, VERDICT r17 #3) and which still needed a
+    * crossJoin fallback past 16 cells. The kernel's cell count changes a
+    * loop bound, not the tree, so the fallback is gone. Ties go to the
+    * lowest index, which [[cellModel]]'s order makes the lowest cell —
+    * the window's (score desc, cell asc), ties included; NaN scores rank
+    * first like the window sort (fixes ADVICE r17's -1-sentinel
+    * divergence). */
   private[graft] def ivfProbesOn(queries: DataFrame,
       c: DataFrame, nprobe: Int = IvfNprobe,
       metric: String = "cosine"): DataFrame = {
-    val sorted = c.select(col("cell"), col("cv")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
-    require(sorted.nonEmpty, "ivf probe selection needs a non-empty model")
-    val d = sorted.head._2.length
-    require(sorted.forall(_._2.length == d),
-      "centroid model is ragged — all cells must share one dimension")
-    val np = math.min(nprobe, sorted.length) // window form capped implicitly
-    val idx = call_function("top_cells", col("qv"),
-      typedLit(sorted.flatMap(_._2).toSeq), lit(sorted.length), lit(np),
-      lit(metricId(metric)))
+    val m = cellModel(c)
+    val np = math.min(nprobe, m.cells) // window form capped implicitly
+    val idx = call_function("top_cells", col("qv"), m.flat, lit(m.cells),
+      lit(np), lit(metricId(metric)))
     queries
       .select(col("qid"), col("qv"), explode(idx).as("ci"))
-      .select(col("qid"), col("qv"),
-        element_at(typedLit(sorted.map(_._1).toSeq), col("ci") + 1)
-          .as("cell"))
+      .select(col("qid"), col("qv"), m.cellAt(col("ci")).as("cell"))
   }
 
   private[graft] def ivfCandidates(spark: SparkSession, dir: String,
@@ -516,11 +485,11 @@ object Similarity {
 
   // -------------------------------------------------------------- n_ivf_big
   /** The IVF tier at its production-shaped config — [[BigIvfCells]] cells /
-    * [[BigIvfNprobe]] probes, past [[AssignInlineMaxCells]] so the DRIVER
-    * GATE exercises the `nearest_centroid` kernel-assignment path end-to-
-    * end, not just the 16-cell inline toy (VERDICT r10 #7). Rows-only
+    * [[BigIvfNprobe]] probes, so the Verify gate exercises a 64-cell model
+    * end-to-end, not just the 16-cell toy (VERDICT r10 #7). Rows-only
     * (approximate — not DuckDB-portable); SimilaritySpec pins recall
-    * floors and inline≡kernel assignment equality. */
+    * floors, and holds `nearest_centroid` assignment against a scalar
+    * cross-join reference at 16 and 64 cells. */
   def nIvfBig(spark: SparkSession, dir: String): DataFrame =
     nIvfTopkWith(spark, dir, QuantIters, BigIvfCells, BigIvfNprobe)
 
@@ -658,14 +627,10 @@ object Similarity {
     * Lloyd empty-cell rule: a (seg, code) cell that captured no vectors
     * keeps its previous centroid, so the flat array always holds exactly
     * segs×K×D values and code ids can never misalign `pq_score`'s
-    * seg-major indexing (ADVICE r4). */
-  private[graft] def pqTrain(spark: SparkSession, dir: String,
-      iters: Int = QuantIters, segments: Int = PqSegments,
-      codebook: Int = PqCodebook, trainSampleMod: Int = 1): Array[Double] =
-    pqTrainOn(emb(spark, dir), PqDim, iters, segments, codebook, trainSampleMod)
-
-  /** The frame-based trainer (graft.api.AnnApi); `dim` is the embedding
-    * dimension of the supplied corpus (the dir form passes [[PqDim]]). */
+    * seg-major indexing (ADVICE r4).
+    *
+    * `dim` is the embedding dimension of `vecs` (the dir-based entries
+    * pass [[PqDim]]). */
   private[graft] def pqTrainOn(vecs: DataFrame, dim: Int,
       iters: Int = QuantIters, segments: Int = PqSegments,
       codebook: Int = PqCodebook, trainSampleMod: Int = 1): Array[Double] = {
@@ -820,16 +785,11 @@ object Similarity {
       segments: Int = PqSegments, codebook: Int = PqCodebook)
       : (DataFrame, Array[Double], DataFrame) = {
     val c = ivfQuantizer(spark, dir, iters, cells)
-    val (books, _) = pqBuild(spark, dir, iters, segments, codebook)
+    val books = pqTrainOn(emb(spark, dir), PqDim, iters, segments, codebook)
     (c, books, ivfpqEncode(emb(spark, dir), c, books, segments))
   }
 
   /** The per-(query, cell) probe frame with precomputed ADC tables. */
-  private def ivfpqProbes(spark: SparkSession, dir: String,
-      c: DataFrame, books: Array[Double], nprobe: Int = IvfNprobe,
-      segments: Int = PqSegments): DataFrame =
-    ivfpqProbesOn(queriesDf(spark, dir), c, books, nprobe, segments)
-
   private[graft] def ivfpqProbesOn(queries: DataFrame,
       c: DataFrame, books: Array[Double], nprobe: Int = IvfNprobe,
       segments: Int = PqSegments, metric: String = "cosine"): DataFrame = {
@@ -1005,7 +965,7 @@ object Similarity {
 
   def nIvfpqDelta(spark: SparkSession, dir: String): DataFrame = {
     val c = ivfQuantizer(spark, dir)
-    val (books, _) = pqBuild(spark, dir)
+    val books = pqTrainOn(emb(spark, dir), PqDim)
     val path = "target/ivfpq_delta_index"
     ivfpqWriteIndex(
       ivfpqEncode(emb(spark, dir).filter(col("vec_id") < DeltaSplitId),

@@ -494,6 +494,10 @@ class PlanAuditSpec extends SparkSpec {
     val p = finalPlan(assigned)
     assert(!p.contains("Exchange"),
       s"index-build assignment shuffles the corpus:\n$p")
+    // the default 16-cell model runs the one fused kernel, not a per-cell
+    // expression chain
+    assert(p.contains("nearest_centroid"),
+      s"${Similarity.IvfCells}-cell assignment does not use nearest_centroid:\n$p")
   }
 
   test("ivfpq stored-index serve: scan prunes to the probed cells' partitions") {

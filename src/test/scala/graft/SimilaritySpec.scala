@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Similarity
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** §2.6 ANN semantics at sf0.01 (500 vectors — stable statistics):
@@ -335,26 +336,64 @@ class SimilaritySpec extends SparkSpec {
       s"tie/degenerate probes wrong: $got")
   }
 
-  test("ivf assignment: the nearest_centroid kernel path equals the inline " +
-    "greatest chain cell-for-cell (same math, same tie order)") {
-    val c = Similarity.ivfQuantizer(spark, sf01)
+  /** The cell `assignTo` gives each vector, by vec_id. */
+  private def assignedCells(corpus: DataFrame, cents: DataFrame,
+      metric: String): Map[Long, Int] =
+    Similarity.assignTo(corpus, cents, metric).select("vec_id", "cell")
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+
+  /** Reference assignment, independent of the `nearest_centroid` kernel:
+    * every (vector, centroid) pair of the cross join is scored with the
+    * scalar metric function, and the argmax is taken on the driver, ties
+    * to the highest cell. */
+  private def referenceCells(corpus: DataFrame, cents: DataFrame,
+      metric: String): Map[Long, Int] = {
+    val byScoreThenCell = Ordering.Tuple2(Ordering.Double.TotalOrdering,
+      Ordering.Int)
+    corpus.crossJoin(cents.select("cell", "cv"))
+      .select(col("vec_id"), col("cell"),
+        Similarity.scoreCol(metric, col("embedding"), col("cv")).as("s"))
+      .collect().groupBy(_.getLong(0))
+      .map { case (id, rs) => id ->
+        rs.maxBy(r => (r.getDouble(2), r.getInt(1)))(byScoreThenCell).getInt(1) }
+  }
+
+  test("ivf assignment: nearest_centroid equals a scalar cross-join argmax " +
+    "reference under cosine, l2 and ip at 16 and 64 cells, ties to the " +
+    "highest cell") {
     val corpus = Tables.t(spark, sf01, "embeddings")
       .select("vec_id", "embedding")
-    def cells(inlineMax: Int): Map[Long, Int] =
-      Similarity.assignTo(corpus, c, inlineMax).collect()
-        .map(r => r.getLong(0) -> r.getInt(2)).toMap
-    val inline = cells(inlineMax = Int.MaxValue)
-    val kernel = cells(inlineMax = 0)
-    assert(inline.nonEmpty && inline.size == kernel.size)
-    val diff = inline.collect { case (id, cl) if kernel(id) != cl =>
-      (id, cl, kernel(id)) }
-    assert(diff.isEmpty, s"paths diverge on ${diff.take(5)}")
+    for (cells <- Seq(Similarity.IvfCells, Similarity.BigIvfCells)) {
+      val c = Similarity.ivfQuantizer(spark, sf01, cells = cells)
+      for (metric <- Seq("cosine", "l2", "ip")) {
+        val got = assignedCells(corpus, c, metric)
+        val want = referenceCells(corpus, c, metric)
+        assert(want.size == corpus.count() && got.keySet == want.keySet)
+        val diff = want.collect { case (id, cl) if got(id) != cl =>
+          (id, cl, got(id)) }
+        assert(diff.isEmpty,
+          s"cells=$cells $metric: kernel diverges from the reference on " +
+            s"(vec_id, want, got) ${diff.take(5)}")
+      }
+    }
+    // ties the corpus can't produce: cells 3 and 5 hold the same centroid,
+    // and the ids are sparse and unsorted, so a tie must resolve to the
+    // highest cell id, not to the first row or the highest row index
+    import spark.implicits._
+    val dup = Seq((7, Seq(1.0f, 0.0f)), (5, Seq(0.0f, 1.0f)),
+      (3, Seq(0.0f, 1.0f)), (1, Seq(0.6f, -0.8f))).toDF("cell", "cv")
+    val vecs = Seq((1L, Seq(0.0f, 2.0f)), (2L, Seq(3.0f, 0.1f)))
+      .toDF("vec_id", "embedding")
+    for (metric <- Seq("cosine", "l2", "ip")) {
+      assert(referenceCells(vecs, dup, metric) == Map(1L -> 5, 2L -> 7),
+        s"$metric reference")
+      assert(assignedCells(vecs, dup, metric) == Map(1L -> 5, 2L -> 7),
+        s"$metric kernel")
+    }
   }
 
   test("n_ivf_big (64 cells / nprobe 8): the gate config exercises the " +
     "kernel assignment — k per query, recall floor, pruning holds") {
-    assert(Similarity.BigIvfCells > Similarity.AssignInlineMaxCells,
-      "n_ivf_big must exercise the kernel path")
     val n = Tables.t(spark, sf01, "embeddings").count()
     val candPerQuery = Similarity.ivfCandidates(spark, sf01,
         cells = Similarity.BigIvfCells, nprobe = Similarity.BigIvfNprobe)
@@ -517,17 +556,13 @@ class SimilaritySpec extends SparkSpec {
       info(f"$metric%6s IVFADC recall@10 = $recall%.3f")
       assert(recall >= 0.4, s"$metric lifecycle recall $recall < 0.4")
     }
-    // inline and kernel assignment agree under every metric (the codegen
-    // chain and the fused loop share semantics beyond cosine)
+    // on this varied-norm corpus, assignment under every metric equals
+    // the scalar cross-join reference
     val cents = Similarity.ivfQuantizerOn(corpus, iters = 0, cells = 16)
     Seq("cosine", "l2", "ip").foreach { metric =>
-      val inline = Similarity.assignTo(corpus, cents,
-        inlineMaxCells = 64, metric = metric)
-        .select("vec_id", "cell").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val kernel = Similarity.assignTo(corpus, cents,
-        inlineMaxCells = 2, metric = metric)
-        .select("vec_id", "cell").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      assert(inline == kernel, s"inline vs kernel assignment drifted: $metric")
+      assert(assignedCells(corpus, cents, metric) ==
+        referenceCells(corpus, cents, metric),
+        s"nearest_centroid assignment drifted from the reference: $metric")
     }
   }
 
