@@ -1,13 +1,17 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table access for the driver-generated TPC-H-ish testdata (TESTDATA.md).
   *
   * All queries take `(spark, sfDir)` and read parquet directly — at cluster
-  * scale these would be catalog tables over partitioned object-store prefixes;
-  * reading via `spark.read.parquet` keeps the same Catalyst scan node
-  * (`FileSourceScanExec`) with predicate pushdown and column pruning intact.
+  * scale these would be catalog tables over partitioned object-store prefixes.
+  * [[read]] is the one parquet reader: it supplies the table's schema from a
+  * memo, so opening a frame starts no Spark job, and it keeps the same
+  * Catalyst scan node (`FileSourceScanExec`) with predicate pushdown and
+  * column pruning intact. Only `events` still infers its schema per read.
   */
 object Tables {
 
@@ -37,7 +41,53 @@ object Tables {
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else read(spark, s"$dir/$name.parquet")
+
+  /** The session confs whose values change the schema Parquet infers. */
+  private val SchemaConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema")
+
+  /** What an inferred schema was inferred from: the files' total bytes and
+    * latest modification time, and the values of [[SchemaConfs]]. */
+  private final case class Stamp(bytes: Long, mtime: Long, confs: Seq[String])
+
+  /** Qualified path -> the last schema inferred there and its stamp; one
+    * entry per path, so rewrites replace rather than accumulate. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Stamp, StructType)]()
+
+  /** The parquet file or directory at `path`, read with a memoized schema.
+    * `spark.read.parquet` infers the schema in a Spark job that reads a
+    * footer; here that job runs once per (path, stamp) and every later read
+    * passes the schema with `.schema(...)`, which starts no job. The stamp
+    * comes from one `listStatus`: `listFiles` would return
+    * `LocatedFileStatus`es, and on the local file system each of those
+    * forks a shell to read its permissions. A rewrite with another size or
+    * modification time, or a change to a schema-relevant conf, infers
+    * again. A missing or empty path goes to `spark.read.parquet` unchanged,
+    * so its errors are Spark's own. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = graft.sources.Fs.of(spark, path)
+    val listed =
+      try fs.listStatus(p) catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    if (listed.isEmpty) spark.read.parquet(path)
+    else {
+      val stamp = Stamp(listed.map(_.getLen).sum,
+        listed.map(_.getModificationTime).max, SchemaConfs.map(spark.conf.get))
+      val key = fs.makeQualified(p).toString
+      val schema = Option(schemas.get(key)).filter(_._1 == stamp).map(_._2).getOrElse {
+        val inferred = spark.read.parquet(path).schema
+        schemas.put(key, (stamp, inferred))
+        inferred
+      }
+      spark.read.schema(schema).parquet(path)
+    }
+  }
 
   /** `events.ts` has shipped in two parquet generations: TIMESTAMP(NANOS)
     * (which Spark's reader rejects → read nanos-as-long, truncate to micros,

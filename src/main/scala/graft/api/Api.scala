@@ -151,7 +151,8 @@ object DedupApi {
   def nearDupClusters(docs: DataFrame, minJaccard: Double,
       idCol: String = "doc_id", textCol: String = "text",
       persistIntermediate: Boolean = true): DataFrame =
-    clusters(minhashPairs(docs, minJaccard, idCol, textCol,
+    clusters(Dedup.lshPairs(
+      Dedup.wordShingleSets(canon(docs, idCol, textCol)), minJaccard,
       persistIntermediate))
 
   /** Bloom-prefiltered ingest admission (the d_bloom_delta core): rows of
@@ -408,7 +409,7 @@ object PipelineApi {
     ApiUtil.requireCols(docs, idCol, textCol)
     val corpus =
       docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
-    val pairs = Dedup.minhashLshPairs(Dedup.wordShingleSets(corpus), minJaccard)
+    val pairs = Dedup.lshPairs(Dedup.wordShingleSets(corpus), minJaccard)
     Pipeline.splitByGroup(corpus.select("doc_id"),
       Dedup.connectedComponents(pairs))
   }

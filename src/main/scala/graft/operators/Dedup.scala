@@ -200,6 +200,14 @@ object Dedup {
     * recompute than storage turns it off and gets the identical rows
     * (ApiSpec pins equality both ways — VERDICT r11 #7). */
   def minhashLshPairs(shingleSets: DataFrame, minJaccard: Double,
+      persistIntermediate: Boolean = true): DataFrame =
+    lshPairs(shingleSets, minJaccard, persistIntermediate)
+      .orderBy("doc_a", "doc_b")
+
+  /** [[minhashLshPairs]] without its presentation sort: the pair graph
+    * that [[connectedComponents]] labels needs no order, and a sort would
+    * cost it a range-sampler job and a range exchange. */
+  private[graft] def lshPairs(shingleSets: DataFrame, minJaccard: Double,
       persistIntermediate: Boolean = true): DataFrame = {
     val sh = if (persistIntermediate) persistShingles(shingleSets)
              else shingleSets
@@ -290,7 +298,6 @@ object Dedup {
         (size(col("sh_a")) + size(col("sh_b")) - col("inter")), 4))
       .filter(col("jaccard") >= minJaccard)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .orderBy("doc_a", "doc_b")
 
   /** Incremental near-dup detection: a DELTA of new documents against the
     * STORED band-postings index of the already-deduped corpus — the
@@ -321,7 +328,7 @@ object Dedup {
     // cache bound: every frame persisted in this method is DELTA- or
     // PAIRS-sized (delta shingles/bands, candidate pairs, candidate-doc
     // shingles) — never the corpus; the corpus-sized persist guard lives
-    // in minhashLshPairs (persistShingles note)
+    // in lshPairs (persistShingles note)
     val deltaSh = persistShingles(deltaSh0)
     // cached: referenced twice (delta-vs-index join + the delta bucket
     // grouping) — one minhash_sig pass, not two (see the minhashLshPairs
@@ -329,6 +336,14 @@ object Dedup {
     // dropping the third reference)
     val deltaBands = sigBands(deltaSh)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // LAZY on purpose. Its two readers below are shuffle stages that AQE
+    // submits as concurrent jobs; both may compute the same partition of
+    // this persist, and the second to store it logs "Block rdd_… already
+    // exists" (so may `cand` and `needed`, read twice each). The WARN is
+    // that duplicate work, not an error. Eager counts here and on `cand`
+    // and `needed` removed it but cost more than the duplicates they save:
+    // d_minhash_delta 2.09 → 3.59 s, d_minhash_inc serve 1.66 → 2.19 s
+    // at sf0.1 (BASELINE.md, "Corpus construction without needless jobs").
     // against the STORED index this join is where the layout earns its
     // keep: the postings table is bucketed by band_hash
     // ([[minhashIndexWrite]]), so only the delta's bands shuffle — the
@@ -354,7 +369,7 @@ object Dedup {
       .as("doc_id")).distinct()
     val needed = persistShingles(
       baseSh.unionAll(deltaSh).join(broadcast(ids), "doc_id"))
-    jaccardVerify(cand, needed, minJaccard)
+    jaccardVerify(cand, needed, minJaccard).orderBy("doc_a", "doc_b")
   }
 
   /** Bucket count of the stored postings table. Sizing: buckets bound the
@@ -446,7 +461,7 @@ object Dedup {
   def minhashDeltaPairsFromStore(spark: SparkSession, path: String,
       deltaSh0: DataFrame, minJaccard: Double): DataFrame =
     minhashDeltaAgainst(
-      spark.read.parquet(s"$path/shingles"),
+      Tables.read(spark, s"$path/shingles"),
       spark.table(ensurePostingsTable(spark, path)),
       deltaSh0, minJaccard)
 
@@ -896,18 +911,22 @@ object Dedup {
     * checksum), not a collect. At the fixpoint every edge is (node,
     * component-min), so labels fall straight out of the edge list.
     *
-    * Driver finish: the same scalar counts the current edges. Once that
-    * count × 16 B (two longs) is within `spark.sql.autoBroadcastJoinThreshold`
-    * — the session's existing bound on what the driver may collect and
-    * ship — the loop stops contracting, collects the edges and finishes
-    * with a union-find that always links the larger root under the smaller
-    * one, so every root is its component's minimum: the label the fixpoint
-    * gives. The check runs before the first round and after every round, so
-    * a large graph contracts on the cluster until what remains fits, and a
-    * small one (d_cluster's pair graph at sf0.1) runs no round at all and
-    * holds no per-round localCheckpoint. A threshold of -1 turns the
-    * driver finish off. `maxIter` bounds only the distributed rounds: a
-    * graph that neither converges nor fits within them throws.
+    * Driver finish. A graph is small enough for the driver when its rows
+    * × 16 B (two longs) are within `spark.sql.autoBroadcastJoinThreshold`,
+    * the session's existing bound on what the driver may collect and ship.
+    * The first test is ONE action on the pair rows, a `take` of one row
+    * more than the bound: a graph that fits arrives with it, and a
+    * union-find that always links the larger root under the smaller one
+    * labels every node with its component minimum (the label the fixpoint
+    * gives) — no count, no checkpoint, no contraction round, and the
+    * labels come back as a local frame. A graph above the bound keeps the
+    * rows the test computed: they are persisted (recoverable, released when
+    * unreachable, like a checkpoint but with its lineage) and contracted on
+    * the cluster, and the round checksum's count re-tests the fit after
+    * every round, so a large graph contracts until what remains fits. A
+    * threshold of -1 turns the driver finish off. `maxIter` bounds only
+    * the distributed rounds: a graph that neither converges nor fits
+    * within them throws.
     *
     * 100 TB shape: the edge list holds ONLY docs that appear in some
     * near-dup pair (a small fraction of the corpus); each round is two
@@ -929,33 +948,46 @@ object Dedup {
 
   private[graft] def components(pairs: DataFrame, maxIter: Int): Components = {
     val spark = pairs.sparkSession
-    // LAZY localCheckpoint everywhere: the per-round checksum (the
-    // convergence test, which must run anyway) is the action that
-    // materializes each checkpoint — one Spark job per round, not two
     val raw = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .localCheckpoint(eager = false)
+    val driverBytes = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val fitRows = if (driverBytes < 0) -1L
+                  else math.min(driverBytes / 16, Int.MaxValue - 1L)
+    def fitsDriver(rows: Long): Boolean = rows <= fitRows
+    // Dataset.rdd plans the pairs once and, under AQE, runs every shuffle
+    // stage of that plan right here; the fit test then reads only the
+    // final stage, and the rounds reuse the same shuffle output
+    val rows = raw.rdd
+    if (fitRows >= 0) {
+      val head = rows.take(fitRows.toInt + 1)
+      if (fitsDriver(head.length)) {
+        import spark.implicits._
+        val labels = unionFindLabels(head.map(_.getLong(0)), head.map(_.getLong(1)))
+          .toSeq.toDF("doc_id", "cluster_id")
+        return Components(labels, 0, finishedOnDriver = true)
+      }
+    }
+    val kept = spark.createDataFrame(
+      rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      raw.schema)
     // all nodes, captured from the RAW pair list BEFORE the self-pair
     // filter: a document whose only pair is (d, d) still gets a label
     // (itself) instead of silently vanishing from the output (ADVICE r4);
     // contraction itself never needs self-loops. Plain derived plan — reads
-    // the checkpointed pairs once, at the final labeling join.
-    val nodes = raw.select(col("u")).union(raw.select(col("v").as("u")))
+    // the persisted pairs once, at the final labeling join.
+    val nodes = kept.select(col("u")).union(kept.select(col("v").as("u")))
       .distinct().withColumnRenamed("u", "id")
-    var edges = raw.filter(col("u") =!= col("v"))
+    var edges = kept.filter(col("u") =!= col("v"))
     // bit_xor: order-insensitive and overflow-free (ANSI sum of full-range
     // hashes would throw); edge sets are distinct so xor-cancellation is moot
     def checksum(e: DataFrame): (Long, Long) = {
       val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    val driverBytes = spark.sessionState.conf.autoBroadcastJoinThreshold
-    def fitsDriver(nEdges: Long): Boolean =
-      driverBytes >= 0 && nEdges <= driverBytes / 16
     // a localCheckpoint's blocks are freed only when its RDD is GC'd —
     // without explicit release a 10-round run holds 10 materialized edge
     // sets concurrently; drop each superseded round as soon as the next one
-    // is materialized (`raw` stays: `nodes` still reads it at the end, and
-    // round-0 `edges` is a derived view of it, hence the iter > 0 guard)
+    // is materialized (round-0 `edges` is a view of the persisted pairs,
+    // which `nodes` still reads at the end, hence the iter > 0 guard)
     var sig = checksum(edges)
     var iter = 0
     var converged = false
@@ -969,6 +1001,9 @@ object Dedup {
     // job submissions, and an eager intermediate checkpoint would BE the
     // per-round action again. Details in BASELINE.md r7.
     while (!converged && !fitsDriver(sig._1) && iter < maxIter) {
+      // a LAZY localCheckpoint is not free under AQE: the call itself runs
+      // every shuffle stage of the round's plan to build the checkpointed
+      // RDD; the checksum then computes and stores the round's rows
       val next = contractionRound(edges).localCheckpoint(eager = false)
       val nextSig = checksum(next)
       if (iter > 0) Checkpoints.release(edges)
@@ -995,10 +1030,11 @@ object Dedup {
     Components(labels, iter, onDriver)
   }
 
-  /** (node, component minimum) for every non-minimum node of the graph with
-    * edges (us(i), vs(i)). Nodes are indexed by rank in the sorted id
-    * array, and a union always links the larger-ranked root under the
-    * smaller one, so each root is its component's minimum id. */
+  /** (node, component minimum) for every node of the graph with edges
+    * (us(i), vs(i)); a self-pair (d, d) makes d a node of its own. Nodes
+    * are indexed by rank in the sorted id array, and a union always links
+    * the larger-ranked root under the smaller one, so each root is its
+    * component's minimum id. */
   private def unionFindLabels(us: Array[Long], vs: Array[Long])
       : Array[(Long, Long)] = {
     val all = new Array[Long](us.length + vs.length)
@@ -1021,9 +1057,7 @@ object Dedup {
       val b = find(java.util.Arrays.binarySearch(ids, vs(i)))
       if (a < b) parent(b) = a else if (b < a) parent(a) = b
     }
-    (0 until n).iterator.map(i => i -> find(i)).collect {
-      case (i, r) if r != i => ids(i) -> ids(r)
-    }.toArray
+    Array.tabulate(n)(i => ids(i) -> ids(find(i)))
   }
 
   /** Near-dup clusters from the minhash pipeline: each doc that has any
@@ -1035,7 +1069,7 @@ object Dedup {
     * the driver union-find with no contraction round; a larger one
     * contracts on the cluster until it fits ([[connectedComponents]]). */
   def dCluster(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = minhashLshPairs(
+    val pairs = lshPairs(
       wordShingleSets(withPlantedNear(docs(spark, dir))), 0.5)
     val labeled = connectedComponents(pairs)
     // cluster_size as a WINDOW count (round 18, guide §2.4): the old

@@ -162,7 +162,10 @@ object Pipeline {
     * read the checkpointed (doc_id, source, toks, bucket) slice — 32 B/row,
     * ~320 GB at 10^10 docs, the price of making the bucketing a fact rather
     * than a plan coincidence (same pattern d_cluster uses per contraction
-    * round).
+    * round). "Lazy" does not mean jobless under AQE: the call itself runs
+    * every shuffle stage of its plan to build the checkpointed RDD — here
+    * the range sampler and the range exchange, the 2 jobs p_token_budget
+    * still runs at construction.
     *
     * Slice count: the range exchange takes `spark.sql.shuffle.partitions`
     * and AQE coalesces adjacent slices to its advisory size. A coalesced
@@ -335,7 +338,7 @@ object Pipeline {
     * same corpus, plus determinism and a sane val fraction. */
   def pSplitLeakfree(spark: SparkSession, dir: String): DataFrame = {
     val corpus = Dedup.withPlantedNear(Tables.t(spark, dir, "documents"))
-    val pairs = Dedup.minhashLshPairs(Dedup.wordShingleSets(corpus), 0.5)
+    val pairs = Dedup.lshPairs(Dedup.wordShingleSets(corpus), 0.5)
     val labeled = Dedup.connectedComponents(pairs)
     splitByGroup(corpus.select("doc_id"), labeled)
   }
@@ -470,7 +473,8 @@ object Pipeline {
     * equivalent: `repartitionByRange` on the sort key yields ordered,
     * CONTIGUOUS partitions (pinned by a lazy localCheckpoint — the
     * p_token_budget convention, since partition ids over a sampled
-    * exchange are execution-scoped); per-partition counts (≤ #partitions
+    * exchange are execution-scoped; under AQE the call itself runs the
+    * range sampler and exchange, see tokenBudgetParted); per-partition counts (≤ #partitions
     * rows) cumulate into offsets; global rank = offset + local
     * row_number; the SQL ntile bucket formula — first n%k buckets get
     * ⌈n/k⌉ rows — applied arithmetically to (rank, n). Deterministically

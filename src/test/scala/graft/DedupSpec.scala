@@ -261,6 +261,32 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("connectedComponents: a pair graph of exactly the bound finishes on " +
+      "the driver, one row more contracts on the cluster, same labels") {
+    // chains of five pairs (six nodes) with a gap between chains, so the
+    // graph has several components and `rows` distinct non-self pairs
+    def graph(rows: Int) = (0L until rows).map(i => (i + i / 5, i + i / 5 + 1))
+    val bound = 40
+    val (atBound, above) = withSession { s =>
+      import s.implicits._
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", (bound * 16).toString)
+      val at = Dedup.components(graph(bound).toDF("doc_a", "doc_b"), 15)
+      assert(at.finishedOnDriver && at.rounds == 0,
+        s"$bound rows: finished on driver ${at.finishedOnDriver} after ${at.rounds} rounds")
+      val over = Dedup.components(graph(bound + 1).toDF("doc_a", "doc_b"), 15)
+      assert(over.rounds >= 1, s"${bound + 1} rows ran no contraction round")
+      (labelMap(at.labels), labelMap(over.labels))
+    }
+    val (wantAt, wantAbove) = distributed { s =>
+      import s.implicits._
+      (labelMap(Dedup.connectedComponents(graph(bound).toDF("doc_a", "doc_b"))),
+        labelMap(Dedup.connectedComponents(graph(bound + 1).toDF("doc_a", "doc_b"))))
+    }
+    assert(atBound == wantAt)
+    assert(above == wantAbove)
+    assert(above.values.toSet.size == 9, s"components: ${above.values.toSet}")
+  }
+
   test("connectedComponents hands off to the driver once a contraction " +
       "round brings the edge list within the bound") {
     import spark.implicits._

@@ -21,38 +21,6 @@ class PlanAuditSpec extends SparkSpec {
   private def countOccurrences(s: String, sub: String): Int =
     s.sliding(sub.length).count(_ == sub)
 
-  /** `build`'s result and the Spark jobs submitted on this thread while it
-    * runs. Listener events arrive asynchronously, so a fence job in a
-    * second group runs after `build`: once the listener has seen the fence
-    * start, it has seen every earlier job start too. */
-  private def jobsDuring[A](build: => A): (A, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"plan-audit-${java.util.UUID.randomUUID}"
-    val fence = s"$group-fence"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => seen.add(g))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "construction under audit")
-      val result = build
-      sc.setJobGroup(fence, "listener fence")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!seen.contains(fence) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(fence), "listener never saw the fence job")
-      (result, seen.toArray.count(_ == group))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("q1: shipdate filter reaches the parquet scan; schema pruned") {
     val p = plan(Tpch.q1(spark, sf))
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"), p)
@@ -396,14 +364,41 @@ class PlanAuditSpec extends SparkSpec {
     import spark.implicits._
     val pairs = Seq((5L, 3L), (3L, 9L), (20L, 21L), (9L, 12L), (30L, 30L))
       .toDF("doc_a", "doc_b")
-    // construction runs the round-0 edge count (an aggregate: its shuffle
-    // map stage and its result, 2 jobs) and the edge collect (1); every
-    // contraction round would add its exchanges and its own count
+    // construction is the fit test alone: one take of the pair rows, which
+    // scans the local frame's first partition and then the other three
+    // (2 jobs); a count, a checkpoint or a contraction round would add more
     val (labels, jobs) = jobsDuring(Dedup.connectedComponents(pairs))
-    assert(jobs == 3, s"building the components ran $jobs Spark jobs")
+    assert(jobs == 2, s"building the components ran $jobs Spark jobs")
     assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 12L -> 3L, 20L -> 20L, 21L -> 20L,
         30L -> 30L))
+  }
+
+  test("construction jobs per entry at sf0.01: corpus entries at most their " +
+      "pins, relational entries none") {
+    // steady state, as a benchmark pass sees it: the entry has been built
+    // and run once (its tables' schemas are memoized) and the cache is
+    // clear. The pins may fall; a rise is a regression in construction.
+    // d_cluster: the shingle cache's count and the pair graph's fit test
+    // (the pair pipeline's shuffle stages, run by AQE, and the take, which
+    // scans the first of the final stage's partitions, then the rest);
+    // p_token_budget: the slice checkpoint's range sampler and exchange.
+    val pins = Seq("d_exact" -> 0, "x_quality" -> 0, "m_image_decode" -> 0,
+      "p_token_budget" -> 2, "d_cluster" -> 9,
+      "q3" -> 0, "q5" -> 0, "q9" -> 0, "q18" -> 0)
+    val counts = pins.map { case (name, _) =>
+      val entry = SparkEntry.queries(name)
+      entry(spark, sf01).collect()
+      spark.catalog.clearCache()
+      val (df, jobs) = jobsDuring(entry(spark, sf01))
+      df.collect()
+      spark.catalog.clearCache()
+      name -> jobs
+    }.toMap
+    pins.foreach { case (name, pin) =>
+      assert(counts(name) <= pin,
+        s"$name ran ${counts(name)} construction jobs, pinned at $pin; all: $counts")
+    }
   }
 
   test("x_boilerplate: count-distinct is partial-aggregated before the shuffle") {
@@ -505,8 +500,8 @@ class PlanAuditSpec extends SparkSpec {
     val path = "target/ivfpq_index_audit"
     Similarity.ivfpqWriteIndex(idx, path)
     // building the serve runs one job, the probe rows' collect; the query
-    // frame is opened first, outside the count, because opening it infers
-    // its schema in a job of its own
+    // frame is opened first, outside the count, because the first opening
+    // of a table infers its schema in a job of its own (Tables.read)
     val queries = Tables.t(spark, sf, "embeddings")
       .filter(org.apache.spark.sql.functions.col("vec_id") < Similarity.NumQueries)
       .selectExpr("vec_id AS qid", "embedding AS qv")

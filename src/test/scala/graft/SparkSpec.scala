@@ -22,6 +22,38 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     body(s)
   }
 
+  /** `build`'s result and the Spark jobs submitted on this thread while it
+    * runs. Listener events arrive asynchronously, so a fence job in a
+    * second group runs after `build`: once the listener has seen the fence
+    * start, it has seen every earlier job start too. */
+  def jobsDuring[A](build: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"plan-audit-${java.util.UUID.randomUUID}"
+    val fence = s"$group-fence"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => seen.add(g))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "construction under audit")
+      val result = build
+      sc.setJobGroup(fence, "listener fence")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(fence) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(fence), "listener never saw the fence job")
+      (result, seen.toArray.count(_ == group))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   override def afterAll(): Unit = () // session shared across suites; JVM exit cleans up
 }
 
