@@ -1,39 +1,29 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftLeaf}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Release helper for iterative algorithms that pin each round in a lazy
-  * `localCheckpoint` (d_cluster star contraction, x_bpe_train merge rounds):
-  * a local checkpoint's blocks are freed only when its RDD is GC'd, so a
-  * k-round run would otherwise hold k materialized intermediates
-  * concurrently. Call on the SUPERSEDED round as soon as the next one is
-  * materialized.
-  *
-  * Unpersisting a local checkpoint always logs "cannot be recomputed after
-  * unpersisting" at WARN — a caution against accidental misuse that is
-  * exactly the intent here (the released round is never re-read). That one
-  * logger is silenced only for the duration of the unpersist loop and its
-  * prior level restored (ADVICE r7: a permanent downgrade would hide
-  * unrelated MapPartitionsRDD warnings JVM-wide), so the driver-parsed
-  * bench tail stays clean while real errors still surface.
-  */
+/** The one way graft pins an intermediate: `pin` persists `df`'s physical
+  * rows MEMORY_AND_DISK as `UnsafeRow` copies under a one-node plan, so
+  * iterative rounds keep a constant-size plan, every consumer reads one
+  * materialization, and a block lost with its executor is recomputed from
+  * lineage. Under AQE the call runs `df`'s shuffle stages; the first
+  * action (or `eager`'s count) stores the rows. */
 private[graft] object Checkpoints {
 
-  def release(df: DataFrame): Unit = {
-    val loggerName = "org.apache.spark.rdd.MapPartitionsRDD"
-    val logger = org.apache.logging.log4j.LogManager.getLogger(loggerName)
-    val prior = logger.getLevel
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      loggerName, org.apache.logging.log4j.Level.ERROR)
-    try {
-      df.queryExecution.analyzed.collectLeaves().foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ =>
-      }
-    } finally {
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        loggerName, prior)
-    }
+  def pin(df: DataFrame, eager: Boolean = false): DataFrame = {
+    val rows = df.queryExecution.toRdd.map(_.copy())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    if (eager) rows.count()
+    GraftLeaf.over(df, rows)
   }
+
+  /** Frees the blocks of a pinned frame. Call on a superseded round once
+    * the next one is materialized; the frame must not be read again. */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectLeaves().foreach {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 }

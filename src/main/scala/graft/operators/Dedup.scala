@@ -725,8 +725,11 @@ object Dedup {
     * count. */
   /** Hard cap on the bloom sketch size: 64 MB = 2^29 bits. The sketch is
     * embedded as a PLAN LITERAL (bloom_might_contain needs a scalar), so it
-    * is serialized into every task closure — fine to tens of MB, pathological
-    * at GBs. 2^29 bits at the 10–15 bits/item rule covers a ~40–50M-item
+    * is serialized into every task binary, once per copy of the routing
+    * filter, which is pushed into each branch of d_bloom_delta's three-way
+    * union: at 8M bits (1 MiB) its stages ship 13–19 MiB binaries (Spark's
+    * "Broadcasting large task binary" WARN) — fine to tens of MB, at GBs
+    * pathological. 2^29 bits at the 10–15 bits/item rule covers a ~40–50M-item
     * corpus per sketch; larger corpora shard by hash prefix (one admit per
     * shard), which is the documented 100 TB contract. */
   val MaxBloomBits: Long = 1L << 29
@@ -788,11 +791,9 @@ object Dedup {
     // narrow output (doc_id + one long) — kernel once AND narrow exchange
     // (round 18 — see TextAnalysis.narrowSorted; the r17 sort-below form
     // ran the kernel once but range-exchanged the full text column).
-    withPlantedExact(docs(spark, dir))
+    TextAnalysis.narrowSorted(withPlantedExact(docs(spark, dir))
       .select(col("doc_id"),
-        expr("rolling_fingerprint(text)").as("fingerprint"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .orderBy("doc_id")
+        expr("rolling_fingerprint(text)").as("fingerprint")), "doc_id")
   }
 
   // ---------------------------------------------------------------- d_contam
@@ -918,10 +919,10 @@ object Dedup {
     * more than the bound: a graph that fits arrives with it, and a
     * union-find that always links the larger root under the smaller one
     * labels every node with its component minimum (the label the fixpoint
-    * gives) — no count, no checkpoint, no contraction round, and the
-    * labels come back as a local frame. A graph above the bound keeps the
-    * rows the test computed: they are persisted (recoverable, released when
-    * unreachable, like a checkpoint but with its lineage) and contracted on
+    * gives) — no count, no pin, no contraction round, and the labels come
+    * back as a local frame. A graph above the bound keeps the shuffle
+    * output the test ran: the pairs are pinned over the same query
+    * execution (recoverable, released when unreachable) and contracted on
     * the cluster, and the round checksum's count re-tests the fit after
     * every round, so a large graph contracts until what remains fits. A
     * threshold of -1 turns the driver finish off. `maxIter` bounds only
@@ -934,9 +935,10 @@ object Dedup {
     * driver-side graph only once it is broadcast-sized. Skewed
     * mega-components (100 TB boilerplate) are exactly what the large-star
     * step splits: a node's larger neighbors re-attach to the component min,
-    * so hub degree halves per round. `localCheckpoint` each round truncates
-    * the otherwise-doubling lineage (each round's plan references the last
-    * round's twice). */
+    * so hub degree halves per round. Each round is pinned
+    * (`Checkpoints.pin`), so a round's plan is one leaf instead of the
+    * otherwise-doubling tree (each round's plan references the last
+    * round's twice), and a block lost with its executor is recomputed. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 15): DataFrame =
     components(pairs, maxIter).labels
 
@@ -953,22 +955,20 @@ object Dedup {
     val fitRows = if (driverBytes < 0) -1L
                   else math.min(driverBytes / 16, Int.MaxValue - 1L)
     def fitsDriver(rows: Long): Boolean = rows <= fitRows
-    // Dataset.rdd plans the pairs once and, under AQE, runs every shuffle
-    // stage of that plan right here; the fit test then reads only the
-    // final stage, and the rounds reuse the same shuffle output
-    val rows = raw.rdd
+    // toRdd plans the pairs once and, under AQE, runs their shuffle stages
+    // here; the fit test reads only the final stage, and the pin below
+    // reuses the same QueryExecution and so the same shuffle output
     if (fitRows >= 0) {
-      val head = rows.take(fitRows.toInt + 1)
+      val head = raw.queryExecution.toRdd
+        .map(r => (r.getLong(0), r.getLong(1))).take(fitRows.toInt + 1)
       if (fitsDriver(head.length)) {
         import spark.implicits._
-        val labels = unionFindLabels(head.map(_.getLong(0)), head.map(_.getLong(1)))
+        val labels = unionFindLabels(head.map(_._1), head.map(_._2))
           .toSeq.toDF("doc_id", "cluster_id")
         return Components(labels, 0, finishedOnDriver = true)
       }
     }
-    val kept = spark.createDataFrame(
-      rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      raw.schema)
+    val kept = Checkpoints.pin(raw)
     // all nodes, captured from the RAW pair list BEFORE the self-pair
     // filter: a document whose only pair is (d, d) still gets a label
     // (itself) instead of silently vanishing from the output (ADVICE r4);
@@ -983,28 +983,20 @@ object Dedup {
       val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    // a localCheckpoint's blocks are freed only when its RDD is GC'd —
-    // without explicit release a 10-round run holds 10 materialized edge
-    // sets concurrently; drop each superseded round as soon as the next one
-    // is materialized (round-0 `edges` is a view of the persisted pairs,
-    // which `nodes` still reads at the end, hence the iter > 0 guard)
+    // release each superseded round once the next one is stored, or a
+    // 10-round run holds 10 edge sets until GC (round-0 `edges` is a view
+    // of the pinned pairs, which `nodes` reads at the end: iter > 0)
     var sig = checksum(edges)
     var iter = 0
     var converged = false
-    // ONE round per checksum action — deliberately. The tempting batching
-    // (two contraction rounds per action, halving job count; floated in
-    // VERDICT r6) was implemented and MEASURED SLOWER (+40% at sf0.1,
-    // same session, everything else faster): with the intermediate round
-    // only lazily checkpointed, its two consumer branches race to compute
-    // the same partitions inside the one job ("Block already exists"
-    // storms) — the duplicated upstream work costs more than the saved
-    // job submissions, and an eager intermediate checkpoint would BE the
-    // per-round action again. Details in BASELINE.md r7.
+    // ONE round per checksum action — deliberately: two rounds per action
+    // measured +40% at sf0.1, because the lazily pinned middle round's two
+    // consumers race to compute it inside one job ("Block already exists"
+    // storms), and an eager middle pin is the per-round action again
+    // (BASELINE.md r7).
     while (!converged && !fitsDriver(sig._1) && iter < maxIter) {
-      // a LAZY localCheckpoint is not free under AQE: the call itself runs
-      // every shuffle stage of the round's plan to build the checkpointed
-      // RDD; the checksum then computes and stores the round's rows
-      val next = contractionRound(edges).localCheckpoint(eager = false)
+      // the pin runs the round's shuffle stages; the checksum stores it
+      val next = Checkpoints.pin(contractionRound(edges))
       val nextSig = checksum(next)
       if (iter > 0) Checkpoints.release(edges)
       converged = nextSig == sig

@@ -1145,6 +1145,8 @@ object FunctionLib {
     t("orders")(spark, dir)
       .groupBy("o_orderstatus")
       .agg(
+        // rsd 0.01 is an HLL++ buffer of 1,639 long columns, so this plan's
+        // task binary is ~1 MiB (Spark's "Broadcasting large task binary")
         approx_count_distinct(col("o_custkey"), 0.01).as("acd_cust"),
         round(expr("approx_percentile(o_totalprice, 0.5)"), 2).as("ap50"),
         round(expr("approx_percentile(o_totalprice, 0.95)"), 2).as("ap95"),

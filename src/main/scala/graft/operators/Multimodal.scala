@@ -48,13 +48,13 @@ object Multimodal {
     * decode ran TWICE per query. The x_* family fixed this by moving the
     * sort below the kernels, but here that would range-shuffle the heavy
     * BYTE PAYLOADS to save recompute (inverting the §8 move-small-bytes
-    * rule), so instead the SMALL decoded feature rows are lazily
-    * localCheckpoint'ed: the sampler job materializes the blocks (the one
+    * rule), so instead the SMALL decoded feature rows are pinned
+    * (`Checkpoints.pin`): the sampler job stores the blocks (the one
     * decode), the sort's map stage re-reads them, and nothing larger than
     * the feature rows is ever stored. Lazy is race-free here — the sampler
     * and the exchange map run strictly in sequence. */
   private def decodedOnce(features: DataFrame): DataFrame =
-    features.localCheckpoint(eager = false)
+    Checkpoints.pin(features)
 
   /** Assemble the media frame: documents' text bytes act as the opaque
     * payload; metadata derived deterministically from doc_id. */
@@ -714,10 +714,9 @@ object Multimodal {
     val pairs = phashPairs(hashes)
     // The persisted hash frame (corpus-sized: one long per image) must not
     // outlive the query — ADVICE r9 flagged the session-lifetime leak in a
-    // long Verify run. Materialize the (tiny, dup-pairs-sized) result once
-    // via an eager localCheckpoint, then release the hash frame; the
-    // returned plan reads only the checkpointed blocks.
-    val out = pairs.localCheckpoint(eager = true)
+    // long Verify run. Pin the (tiny, dup-pairs-sized) result eagerly, then
+    // release the hash frame; the returned plan reads only the pinned rows.
+    val out = Checkpoints.pin(pairs, eager = true)
     hashes.unpersist(blocking = false)
     out
   }

@@ -157,15 +157,13 @@ object Pipeline {
     * exchange, so it is execution-scoped — the corpus branch and the
     * summary branch must read the SAME materialization or their bucket ids
     * could diverge (exchange reuse makes that true today, but a correctness
-    * property must not hang off a best-effort physical optimization). The
-    * lazy localCheckpoint pins one assignment structurally: both branches
-    * read the checkpointed (doc_id, source, toks, bucket) slice — 32 B/row,
-    * ~320 GB at 10^10 docs, the price of making the bucketing a fact rather
-    * than a plan coincidence (same pattern d_cluster uses per contraction
-    * round). "Lazy" does not mean jobless under AQE: the call itself runs
-    * every shuffle stage of its plan to build the checkpointed RDD — here
-    * the range sampler and the range exchange, the 2 jobs p_token_budget
-    * still runs at construction.
+    * property must not hang off a best-effort physical optimization).
+    * `Checkpoints.pin` fixes one assignment: both branches read the one
+    * persisted (doc_id, source, toks, bucket) slice — 32 B/row, ~320 GB at
+    * 10^10 docs, the price of making the bucketing a fact rather than a plan
+    * coincidence; a lost block is recomputed from the range exchange, whose
+    * slices do not change. The pin runs the range sampler and exchange at
+    * the call, the 2 jobs p_token_budget runs at construction.
     *
     * Slice count: the range exchange takes `spark.sql.shuffle.partitions`
     * and AQE coalesces adjacent slices to its advisory size. A coalesced
@@ -175,9 +173,9 @@ object Pipeline {
     * that put 64 tasks in every later stage, and at 10^10 documents the
     * slices are byte-bounded.
     *
-    * `tokenBudgetParted` is the pre-checkpoint bucketing fragment, exposed
-    * for PlanAuditSpec (the checkpoint boundary hides the range exchange
-    * from the main plan). */
+    * `tokenBudgetParted` is the bucketing fragment below the pin, exposed
+    * for PlanAuditSpec (the pinned leaf hides the range exchange from the
+    * main plan). */
   def tokenBudgetParted(spark: SparkSession, dir: String): DataFrame =
     tokenBudgetPartedOn(Tables.t(spark, dir, "documents"))
 
@@ -200,7 +198,7 @@ object Pipeline {
     * entry is this core with the driver corpus's budget formula). */
   def tokenBudgetOn(docs: DataFrame, budget: org.apache.spark.sql.Column)
       : DataFrame = {
-    val parted = tokenBudgetPartedOn(docs).localCheckpoint(false)
+    val parted = Checkpoints.pin(tokenBudgetPartedOn(docs))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("source", "bucket").orderBy(desc("toks"), asc("doc_id"))
       .rowsBetween(Long.MinValue, 0)
@@ -471,11 +469,10 @@ object Pipeline {
     * whole corpus through ONE reducer (the Exchange SinglePartition shape
     * cb_h2o_win exists to avoid). This is the distributed exact
     * equivalent: `repartitionByRange` on the sort key yields ordered,
-    * CONTIGUOUS partitions (pinned by a lazy localCheckpoint — the
-    * p_token_budget convention, since partition ids over a sampled
-    * exchange are execution-scoped; under AQE the call itself runs the
-    * range sampler and exchange, see tokenBudgetParted); per-partition counts (≤ #partitions
-    * rows) cumulate into offsets; global rank = offset + local
+    * CONTIGUOUS partitions (pinned, as in p_token_budget, since partition
+    * ids over a sampled exchange are execution-scoped; the pin runs the
+    * range sampler and exchange, see tokenBudgetParted); per-partition
+    * counts (≤ #partitions rows) cumulate into offsets; global rank = offset + local
     * row_number; the SQL ntile bucket formula — first n%k buckets get
     * ⌈n/k⌉ rows — applied arithmetically to (rank, n). Deterministically
     * identical to the single-reducer ntile, which IS the DuckDB oracle.
@@ -484,9 +481,9 @@ object Pipeline {
     * ntile's 2.) */
   val CurriculumStages = 5
 
-  /** Pre-checkpoint range-bucketing fragment, exposed for PlanAuditSpec
-    * (the checkpoint boundary hides the range exchange from the main
-    * plan — the tokenBudgetParted convention). */
+  /** Range-bucketing fragment below the pin, exposed for PlanAuditSpec
+    * (the pinned leaf hides the range exchange from the main plan — the
+    * tokenBudgetParted convention). */
   private[graft] def curriculumParted(spark: SparkSession, dir: String): DataFrame =
     Tables.t(spark, dir, "documents")
       .select(col("doc_id"),
@@ -528,11 +525,10 @@ object Pipeline {
   def curriculumOn(scored: DataFrame,
       stages: Int = CurriculumStages): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val parted = scored
+    val parted = Checkpoints.pin(scored
       // scale-adaptive slice count — see curriculumParted
       .repartitionByRange(asc("difficulty"), asc("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(false)
+      .withColumn("pid", spark_partition_id()))
     // summaryKey(pid): the frame is the 32-row partition summary, so a
     // single partition is the DESIGN; the non-foldable key keeps
     // WindowExec's "No Partition Defined" WARN reserved for genuinely

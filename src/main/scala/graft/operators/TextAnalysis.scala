@@ -51,10 +51,10 @@ object TextAnalysis {
     * the one kernel pass into the cache, the sort's map stage reads it —
     * the m_* decode-once pattern; sampler and map run strictly in
     * sequence, so lazy is race-free), then the sort, whose exchange
-    * carries only the narrow rows. persist over localCheckpoint
-    * deliberately: the child plan stays VISIBLE inside InMemoryRelation
-    * (PlanAuditSpec's codegen/kernel audits keep working) and lost blocks
-    * recompute from lineage instead of failing the query. Applied to
+    * carries only the narrow rows. A DataFrame persist rather than
+    * `Checkpoints.pin` deliberately: the child plan stays VISIBLE inside
+    * InMemoryRelation (PlanAuditSpec's codegen/kernel audits keep
+    * working); lost blocks recompute from lineage either way. Applied to
     * every x_* entry whose output is narrower than its text input
     * (langid, quality, tokcount, readability, sentences, gopher); the
     * text-out entries (normalize, scrub, pii) keep the r17
@@ -716,10 +716,10 @@ object TextAnalysis {
     * before the shuffle), a 1-row argmax collect with deterministic
     * tie-breaks (freq DESC, left ASC, right ASC), and a narrow greedy
     * left-to-right fold that applies the merge to every symbol sequence.
-    * Rounds are pinned with a lazy localCheckpoint (materialized by the
-    * next round's argmax action) and superseded rounds released — the
-    * d_cluster iteration convention, so expression nesting and lineage stay
-    * constant-depth across k rounds instead of stacking k lambda layers.
+    * Rounds are pinned lazily (`Checkpoints.pin`, stored by the next
+    * round's argmax action) and a superseded round is released — the
+    * d_cluster iteration convention, so the plan stays one leaf deep across
+    * k rounds instead of stacking k lambda layers.
     *
     * Convention pins (the spec hand-verifies them on the classic
     * low/lower/newest/widest corpus): words end with a `</w>` terminal
@@ -770,7 +770,7 @@ object TextAnalysis {
   private[graft] def bpeTrain(spark: SparkSession, corpus: DataFrame,
       merges: Int): DataFrame = {
     import spark.implicits._
-    var vocab = bpeVocab(corpus).localCheckpoint(eager = false)
+    var vocab = Checkpoints.pin(bpeVocab(corpus))
     var superseded: DataFrame = null
     val learned = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var rank = 1
@@ -788,7 +788,7 @@ object TextAnalysis {
           top.head.getLong(2))
         learned += ((rank, l, r, c))
         superseded = vocab
-        vocab = bpeApplyMerge(vocab, l, r).localCheckpoint(eager = false)
+        vocab = Checkpoints.pin(bpeApplyMerge(vocab, l, r))
         rank += 1
       }
     }

@@ -196,7 +196,8 @@ object Streaming {
     graft.sources.Fs.withLease(fs, table, s"cdcUpsert-$batchId") {
       graft.sources.Fs.deleteMatching(fs, table, s"cdc$batchId-*.parquet")
       val keys = spark.read.parquet(path).select("o_orderkey")
-      val b = batch.localCheckpoint(true) // one source read for both splits
+      // one source read for both splits, pinned for the epoch
+      val b = graft.operators.Checkpoints.pin(batch, eager = true)
       val updates = b.join(keys, Seq("o_orderkey"), "left_semi")
         .select(col("o_orderkey").as("mk"), col("o_totalprice").as("mp"))
       val inserts = b.join(keys, Seq("o_orderkey"), "left_anti")
@@ -213,6 +214,7 @@ object Streaming {
       graft.sources.Fs.deleteQuietly(fs, tmp, recursive = true)
       graft.sources.Sources.cowApplyUpdates(spark, path, targets, updates)
       graft.sources.Fs.touch(fs, marker)
+      graft.operators.Checkpoints.release(b)
     }
     graft.sources.Sources.postCowMutation(spark, path)
   }

@@ -816,13 +816,13 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(countOccurrences(vp, "Exchange") == 1,
       s"vocab build must shuffle exactly once:\n$vp")
-    // per-round pair counting reads the CHECKPOINTED vocab (ExistingRDD),
-    // never the corpus files, and partial-aggregates before its exchange
-    val vocab = TextAnalysis.bpeVocab(corpus).localCheckpoint(eager = false)
+    // per-round pair counting reads the PINNED vocab (ExistingRDD), never
+    // the corpus files, and partial-aggregates before its exchange
+    val vocab = graft.operators.Checkpoints.pin(TextAnalysis.bpeVocab(corpus))
     val pc = TextAnalysis.bpePairCounts(vocab)
     pc.collect()
     val p = finalPlan(pc)
-    assert(p.contains("ExistingRDD"), s"pair counts must read the checkpoint:\n$p")
+    assert(p.contains("ExistingRDD"), s"pair counts must read the pinned vocab:\n$p")
     assert(!p.toLowerCase.contains("parquet"),
       s"pair counting re-scans the corpus:\n$p")
     assert(p.contains("partial_sum"),

@@ -155,5 +155,13 @@ class SessionSpec extends SparkSpec {
     val cboEnv = offenders("SPARK_GRAFT" + "_CBO", _ => false)
     assert(cboEnv.isEmpty,
       s"the opt-in CBO leg is the default session now: ${cboEnv.mkString(", ")}")
+    val notMain: String => Boolean = !_.startsWith("src/main/")
+    val unrecoverable = offenders("localCheck" + "point(", notMain)
+    assert(unrecoverable.isEmpty,
+      s"local checkpoints die with their executor; pin with " +
+        s"Checkpoints.pin: ${unrecoverable.mkString(", ")}")
+    val levels = offenders("Config" + "urator", notMain)
+    assert(levels.isEmpty,
+      s"log levels changed at run time: ${levels.mkString(", ")}")
   }
 }
