@@ -301,12 +301,16 @@ object AnnApi {
       quantizer, books, path, segments, metric)
 
   /** Serve top-K from a stored cell-partitioned index with partition
-    * pruning to the probed cells. Building the returned frame runs one
-    * Spark job: it evaluates the probe rows (queries × nprobe ADC tables)
-    * once, and the cell filter and the broadcast side both come from
-    * them. The store is read with the fixed index schema, so `path` must
-    * hold what [[writeIndex]], [[appendIndex]] or the streaming ingest
-    * wrote. `excludeSelf` as on [[bruteTopK]];
+    * pruning to the probed cells. Building the returned frame collects the
+    * probe rows (queries × nprobe ADC tables) once, and the cell filter
+    * and the broadcast side both come from them: on a local query frame
+    * (`Seq(...).toDF`) Catalyst evaluates them on the driver and building
+    * runs no Spark job; on a scanned frame it runs one. Running the frame
+    * takes three jobs: the broadcast, the pruned scan with the partial
+    * top-k, and a `TakeOrderedAndProject` result. The store is read with
+    * the fixed index schema, so `path` must hold what [[writeIndex]],
+    * [[appendIndex]] or the streaming ingest wrote. `excludeSelf` as on
+    * [[bruteTopK]];
     * `metric` must match the index's build metric (probe selection and
     * the per-query ADC tables both follow it). */
   def serveFromStore(queries: DataFrame, path: String,

@@ -963,8 +963,11 @@ object Dedup {
         .map(r => (r.getLong(0), r.getLong(1))).take(fitRows.toInt + 1)
       if (fitsDriver(head.length)) {
         import spark.implicits._
+        // one partition: a caller's window or sort over the labels then
+        // plans no exchange, which on a driver-sized frame costs more jobs
+        // than the work it spreads
         val labels = unionFindLabels(head.map(_._1), head.map(_._2))
-          .toSeq.toDF("doc_id", "cluster_id")
+          .toSeq.toDF("doc_id", "cluster_id").coalesce(1)
         return Components(labels, 0, finishedOnDriver = true)
       }
     }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
@@ -112,15 +112,26 @@ object Similarity {
     * bounded heaps, and the final merge per qid touches ≤ k × partitions
     * rows. No task ever holds one query's full candidate set (the round-1
     * row_number-window sink shuffled the whole scored set into one
-    * partition per qid), and memory is O(k) per group on every path. */
-  def topK(scored: DataFrame, k: Int): DataFrame = {
-    scored
+    * partition per qid), and memory is O(k) per group on every path.
+    *
+    * `queries` bounds the number of distinct qids in `scored`, when the
+    * caller already knows it. The result then ends in
+    * `orderBy(qid, rn).limit(queries × k)`, which Spark plans as
+    * `TakeOrderedAndProject`: each partition keeps its first rows and the
+    * driver merges them, so the sort runs no range sampler and no range
+    * exchange. The limit never cuts a row (each qid has at most k), so the
+    * rows and their (qid, rn) order are those of the unbounded form. A
+    * result too large for the driver to merge keeps the unbounded form. */
+  def topK(scored: DataFrame, k: Int, queries: Option[Int] = None)
+      : DataFrame = {
+    val ranked = scored
       .groupBy("qid")
       .agg(expr(s"topk_pairs(cos, vid, $k)").as("top"))
       .select(col("qid"), posexplode(col("top")).as(Seq("pos", "p")))
       .select(col("qid"), col("p.id").as("vid"), col("p.score").as("cos"),
         (col("pos") + 1).as("rn"))
       .orderBy("qid", "rn")
+    queries.fold(ranked)(nq => ranked.limit(Math.multiplyExact(nq, k)))
   }
 
   /** Public API: exact cosine top-k of `queries` (qid, qv) against `corpus`
@@ -277,6 +288,13 @@ object Similarity {
       ids: Seq[Int]) {
     /** The cell id of a kernel's centroid index. */
     def cellAt(idx: Column): Column = element_at(typedLit(ids), idx + 1)
+    /** [[cellAt]] on the driver, for indices already collected. */
+    def cellOf(idx: Int): Int = ids(idx)
+    /** The indices of the `nprobe` (capped at `cells`) best cells for
+      * `qv`, ranked (score desc, index asc) by the `top_cells` kernel. */
+    def topCells(qv: Column, nprobe: Int, metric: String): Column =
+      call_function("top_cells", qv, flat, lit(cells),
+        lit(math.min(nprobe, cells)), lit(metricId(metric)))
   }
 
   /** Collect `cents` (cell, cv) into the layout the IVF kernels
@@ -453,11 +471,9 @@ object Similarity {
       c: DataFrame, nprobe: Int = IvfNprobe,
       metric: String = "cosine"): DataFrame = {
     val m = cellModel(c)
-    val np = math.min(nprobe, m.cells) // window form capped implicitly
-    val idx = call_function("top_cells", col("qv"), m.flat, lit(m.cells),
-      lit(np), lit(metricId(metric)))
     queries
-      .select(col("qid"), col("qv"), explode(idx).as("ci"))
+      .select(col("qid"), col("qv"),
+        explode(m.topCells(col("qv"), nprobe, metric)).as("ci"))
       .select(col("qid"), col("qv"), m.cellAt(col("ci")).as("cell"))
   }
 
@@ -789,19 +805,28 @@ object Similarity {
     (c, books, ivfpqEncode(emb(spark, dir), c, books, segments))
   }
 
-  /** The per-(query, cell) probe frame with precomputed ADC tables. */
-  private[graft] def ivfpqProbesOn(queries: DataFrame,
-      c: DataFrame, books: Array[Double], nprobe: Int = IvfNprobe,
-      segments: Int = PqSegments, metric: String = "cosine"): DataFrame = {
+  /** IVFADC probe selection, one row per query: (qid, cells — the kernel
+    * indices of the `nprobe` best cells, ranked as [[ivfProbesOn]] ranks
+    * them — and qtab, the query's ADC table). The table depends on the
+    * query alone, so it is built once per query, not once per probed cell.
+    * The frame is a per-query Project with no explode: over a local query
+    * frame Catalyst's `ConvertToLocalRelation` evaluates it on the driver,
+    * so collecting it starts no job. The model comes back with it, because
+    * its [[CellModel.cellAt]] / [[CellModel.cellOf]] is the one index →
+    * cell mapping. */
+  private def ivfpqProbesOn(queries: DataFrame,
+      c: DataFrame, books: Array[Double], nprobe: Int,
+      segments: Int, metric: String): (CellModel, DataFrame) = {
+    val m = cellModel(c)
     val flat = typedLit(books.toVector)
     // ADC table metric: l2 uses negated squared-distance partials; cosine
     // and ip share the dot-product table (their rankings differ only in
     // probe selection upstream — see pq_table's Scaladoc)
     val tableMetric = if (metric == "l2") 1 else 0
-    ivfProbesOn(queries, c, nprobe, metric)
-      .select(col("qid"), col("cell"),
-        call_function("pq_table", col("qv").cast("array<double>"),
-          flat, lit(segments), lit(tableMetric)).as("qtab"))
+    (m, queries.select(col("qid"),
+      m.topCells(col("qv"), nprobe, metric).as("cells"),
+      call_function("pq_table", col("qv").cast("array<double>"),
+        flat, lit(segments), lit(tableMetric)).as("qtab")))
   }
 
   /** QUERY SERVE for IVFADC: probe cells, broadcast the per-(query, cell)
@@ -813,19 +838,30 @@ object Similarity {
       excludeSelf = true)
 
   /** Frame-based IVFADC serve: queries (qid, qv) against an in-memory
-    * (cell, vec_id, codes) index. `excludeSelf` as on [[bruteTopk]]:
-    * off for caller frames (unrelated id namespaces), on for the dir gate
-    * entries whose queries are corpus rows. */
+    * (cell, vec_id, codes) index. The probe rows ([[ivfpqProbesOn]]) are
+    * exploded lazily to (qid, cell, qtab), the broadcast side. `excludeSelf`
+    * as on [[bruteTopk]]: off for caller frames (unrelated id namespaces),
+    * on for the dir gate entries whose queries are corpus rows. */
   private[graft] def ivfpqServeOn(queries: DataFrame,
       c: DataFrame, books: Array[Double], index: DataFrame,
       nprobe: Int = IvfNprobe, segments: Int = PqSegments,
       excludeSelf: Boolean = false, metric: String = "cosine"): DataFrame = {
-    val probed = index.join(broadcast(
-      ivfpqProbesOn(queries, c, books, nprobe, segments, metric)), "cell")
+    val (m, probes) =
+      ivfpqProbesOn(queries, c, books, nprobe, segments, metric)
+    val perCell = probes
+      .select(col("qid"), explode(col("cells")).as("ci"), col("qtab"))
+      .select(col("qid"), m.cellAt(col("ci")).as("cell"), col("qtab"))
+    scoreProbed(index.join(broadcast(perCell), "cell"), excludeSelf, None)
+  }
+
+  /** ADC-score the index rows joined to their probe rows and keep each
+    * query's top [[K]]; `queries` as on [[topK]]. */
+  private def scoreProbed(probed: DataFrame, excludeSelf: Boolean,
+      queries: Option[Int]): DataFrame = {
     val scored = if (excludeSelf) probed.filter(col("vec_id") =!= col("qid"))
                  else probed
     topK(scored.select(col("qid"), col("vec_id").as("vid"),
-      round(expr("pq_score(codes, qtab)"), 6).as("cos")), K)
+      round(expr("pq_score(codes, qtab)"), 6).as("cos")), K, queries)
   }
 
   /** Assign + PQ-encode a vector frame with an EXISTING model — the one
@@ -912,10 +948,10 @@ object Similarity {
     * ids (≤ queries × nprobe ints — model-sized, like the quantizer
     * itself) become a static IN-filter, so the parquet scan reads ONLY the
     * probed cells' partitions — at 100 TB the difference between reading
-    * nprobe/cells of the index and all of it. Building the serve runs one
-    * Spark job (see [[ivfpqServeFromStoreOn]]). PlanAuditSpec asserts the
-    * PartitionFilters actually reach the scan; SimilaritySpec asserts
-    * byte-identical results to the in-memory serve. */
+    * nprobe/cells of the index and all of it. See [[ivfpqServeFromStoreOn]]
+    * for its jobs. PlanAuditSpec asserts the PartitionFilters actually
+    * reach the scan; SimilaritySpec asserts byte-identical results to the
+    * in-memory serve. */
   private[graft] def ivfpqServeFromStore(spark: SparkSession, dir: String,
       path: String, c: DataFrame, books: Array[Double]): DataFrame =
     ivfpqServeFromStoreOn(queriesDf(spark, dir), path, c, books,
@@ -925,30 +961,38 @@ object Similarity {
     * against the cell-partitioned store, partition-pruned to probed
     * cells. `excludeSelf` as on [[bruteTopk]].
     *
-    * One driver action: the probe rows (queries × nprobe ADC tables — the
-    * rows the broadcast ships through the driver anyway) are collected
-    * once, and both the cell IN-filter and the broadcast side are built
-    * from that one evaluation. A `distinct().collect()` of the cells
-    * beside a broadcast of the lazy probe frame would run the `top_cells`
-    * and `pq_table` kernels twice, in two extra jobs; reading with
-    * [[IndexSchema]] skips the schema-inference job. */
+    * Construction collects the per-query probe rows ([[ivfpqProbesOn]]:
+    * queries × nprobe ADC tables, the rows the broadcast ships through the
+    * driver anyway) once. Over a local query frame Catalyst folds them on
+    * the driver and construction runs no job; over a scanned frame it runs
+    * one. The driver expands them to (qid, cell, qtab), and both the cell
+    * IN-filter and the broadcast side come from those rows. The store is
+    * read with [[IndexSchema]], so no schema-inference job runs either.
+    *
+    * Execution runs three jobs: the broadcast, the pruned scan with the
+    * partial top-k, and the result. The distinct qids of the probe rows
+    * bound [[topK]], so the result sort is a `TakeOrderedAndProject`,
+    * not a range sampler and a range exchange. */
   private[graft] def ivfpqServeFromStoreOn(queries: DataFrame,
       path: String, c: DataFrame, books: Array[Double],
       nprobe: Int = IvfNprobe, segments: Int = PqSegments,
       excludeSelf: Boolean = false, metric: String = "cosine"): DataFrame = {
+    import scala.jdk.CollectionConverters._
     val spark = queries.sparkSession
-    val probes = ivfpqProbesOn(queries, c, books, nprobe, segments, metric)
-    val rows = probes.collectAsList()
-    val local = spark.createDataFrame(rows, probes.schema)
-    val cells = { import scala.jdk.CollectionConverters._
-      rows.asScala.map(_.getAs[Int]("cell")).distinct.sorted }
+    val (m, probes) =
+      ivfpqProbesOn(queries, c, books, nprobe, segments, metric)
+    val rows = probes.collect().toSeq.flatMap { r =>
+      if (r.isNullAt(1)) Nil
+      else r.getSeq[Int](1).map(i => Row(r.get(0), m.cellOf(i), r.get(2)))
+    }
+    val local = spark.createDataFrame(rows.asJava, StructType(Seq(
+      probes.schema("qid"), StructField("cell", IntegerType),
+      probes.schema("qtab"))))
+    val cells = rows.map(_.getInt(1)).distinct.sorted
     val index = readIndex(spark, path)
-      .filter(col("cell").isin(cells.map(Integer.valueOf).toSeq: _*))
-    val probed = index.join(broadcast(local), "cell")
-    val scored = if (excludeSelf) probed.filter(col("vec_id") =!= col("qid"))
-                 else probed
-    topK(scored.select(col("qid"), col("vec_id").as("vid"),
-      round(expr("pq_score(codes, qtab)"), 6).as("cos")), K)
+      .filter(col("cell").isin(cells.map(Integer.valueOf): _*))
+    scoreProbed(index.join(broadcast(local), "cell"), excludeSelf,
+      Some(rows.map(_.get(0)).distinct.size))
   }
 
   // ---------------------------------------------------------- n_ivfpq_delta

@@ -499,17 +499,29 @@ class PlanAuditSpec extends SparkSpec {
     val (c, books, idx) = Similarity.ivfpqBuild(spark, sf)
     val path = "target/ivfpq_index_audit"
     Similarity.ivfpqWriteIndex(idx, path)
-    // building the serve runs one job, the probe rows' collect; the query
-    // frame is opened first, outside the count, because the first opening
-    // of a table infers its schema in a job of its own (Tables.read)
+    // over a parquet query frame, building the serve runs one job, the
+    // probe rows' collect; the query frame is opened first, outside the
+    // count, because the first opening of a table infers its schema in a
+    // job of its own (Tables.read)
     val queries = Tables.t(spark, sf, "embeddings")
       .filter(org.apache.spark.sql.functions.col("vec_id") < Similarity.NumQueries)
       .selectExpr("vec_id AS qid", "embedding AS qv")
     val (built, jobs) = jobsDuring(Similarity.ivfpqServeFromStoreOn(
       queries, path, c, books, excludeSelf = true))
     assert(jobs == 1, s"building the stored-index serve ran $jobs Spark jobs")
+    // over a local query frame the per-query probe Project is evaluated by
+    // the optimizer on the driver: building runs no job, and running runs
+    // three (the broadcast, the scan with the partial top-k, the result)
+    val local = spark.createDataFrame(queries.collectAsList(), queries.schema)
+    val (builtLocal, localJobs) = jobsDuring(Similarity.ivfpqServeFromStoreOn(
+      local, path, c, books, excludeSelf = true))
+    assert(localJobs == 0,
+      s"building the serve over a local query frame ran $localJobs Spark jobs")
+    val (localRows, execJobs) = jobsDuring(builtLocal.collect().toSeq)
+    assert(execJobs <= 3, s"running the stored-index serve took $execJobs jobs")
     val df = Similarity.ivfpqServeFromStore(spark, sf, path, c, books)
-    assert(built.collect().toSeq == df.collect().toSeq)
+    val want = df.collect().toSeq
+    assert(built.collect().toSeq == want && localRows == want)
     val p = finalPlan(df)
     // the probed cell ids become a static IN-filter → partition pruning on
     // the cell-partitioned index layout: the scan reads nprobe directories,
@@ -518,6 +530,27 @@ class PlanAuditSpec extends SparkSpec {
       s"probe cells did not prune index partitions:\n$p")
     assert(p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"),
       s"stored index shuffled for the probe join:\n$p")
+    // queries × k rows: a bounded sort merged on the driver, not a range
+    // sampler job and a range exchange
+    assert(p.contains("TakeOrderedAndProject") &&
+      !p.contains("rangepartitioning"),
+      s"the serve's result sort is not bounded:\n$p")
+    assert(finalPlan(builtLocal).contains("TakeOrderedAndProject"),
+      s"local-frame serve lost its bounded sort:\n${finalPlan(builtLocal)}")
+  }
+
+  test("d_cluster: labels finished on the driver feed the cluster-size " +
+      "window and the doc_id sort without an exchange") {
+    val pairs = Dedup.lshPairs(Dedup.wordShingleSets(Dedup.withPlantedNear(
+      Tables.t(spark, sf, "documents"))), 0.5)
+    assert(Dedup.components(pairs, 15).finishedOnDriver,
+      "the sf0.001 pair graph no longer fits the driver; this audit " +
+        "covers only the driver finish")
+    val df = Dedup.dCluster(spark, sf)
+    df.collect()
+    val p = finalPlan(df)
+    assert(p.contains("LocalTableScan") && !p.contains("Exchange"),
+      s"d_cluster shuffles labels the driver already holds:\n$p")
   }
 
   test("cb_stddev_topn: dispersion stats partial-aggregated; top-10 is TakeOrdered, not a global sort") {

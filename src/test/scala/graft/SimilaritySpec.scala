@@ -145,6 +145,62 @@ class SimilaritySpec extends SparkSpec {
       .collect().toSeq == mem)
   }
 
+  test("stored IVFADC serve: the bounded result sort returns the rows, in " +
+      "the order, of the unbounded topK over the same store") {
+    import spark.implicits._
+    // eight well-separated clusters of varied norms; cluster 0 holds three
+    // vectors, fewer than K, so a query probing only its cell gets fewer
+    // than K rows. The centroids ARE the cluster centers, so every cell
+    // holds exactly its cluster.
+    val rnd = new scala.util.Random(23)
+    val dim = 16; val segments = 4
+    val centers = Array.fill(8)(Array.fill(dim)(4 * rnd.nextGaussian()))
+    val vecs = centers.toSeq.zipWithIndex.flatMap { case (c, i) =>
+      Seq.fill(if (i == 0) 3 else 40) {
+        val scale = 0.5 + rnd.nextDouble()
+        c.map(x => (scale * (x + rnd.nextGaussian())).toFloat).toSeq
+      }
+    }.zipWithIndex.map { case (v, id) => (id.toLong, v) }
+    val corpus = vecs.toDF("vec_id", "embedding")
+    val cents = centers.toSeq.zipWithIndex
+      .map { case (c, i) => (i, c.map(_.toFloat).toSeq) }.toDF("cell", "cv")
+    val books = Similarity.pqTrainOn(corpus, dim, 2, segments, 16)
+    def queries(rows: Seq[(Long, Seq[Float])]): DataFrame =
+      rows.toDF("qid", "qv")
+    val byId = vecs.toMap
+    val batches = Seq(
+      // corpus rows, ids 0–2 from the three-vector cell
+      "corpus" -> queries(Seq(0L, 1L, 2L, 50L, 90L, 200L).map(i => i -> byId(i))),
+      // one qid twice with different vectors: the two merge into one top-K
+      "duplicate qids" -> queries(Seq(7L -> byId(60L), 7L -> byId(130L),
+        8L -> byId(1L))),
+      "one query" -> queries(Seq(0L -> byId(0L))))
+    Seq("cosine", "l2", "ip").foreach { metric =>
+      val path = s"target/bounded_serve_index_$metric"
+      Similarity.ivfpqWriteIndex(
+        Similarity.ivfpqEncode(corpus, cents, books, segments, metric), path)
+      val index = Similarity.readIndex(spark, path)
+      batches.foreach { case (name, local) =>
+        val qPath = s"target/bounded_serve_queries_${name.replace(' ', '_')}"
+        local.write.mode("overwrite").parquet(qPath)
+        val frames = Seq("local" -> local, "parquet" -> spark.read.parquet(qPath))
+        for ((kind, q) <- frames; nprobe <- Seq(1, 3); excl <- Seq(false, true)) {
+          val what = s"$metric, $name, $kind, nprobe $nprobe, excludeSelf $excl"
+          val bounded = Similarity.ivfpqServeFromStoreOn(q, path, cents, books,
+            nprobe, segments, excl, metric)
+          val unbounded = Similarity.ivfpqServeOn(q, cents, books, index,
+            nprobe, segments, excl, metric)
+          val got = bounded.collect().toSeq
+          assert(got.nonEmpty && got == unbounded.collect().toSeq,
+            s"bounded and unbounded serves differ: $what")
+          if (nprobe == 1 && metric != "ip" && name != "duplicate qids")
+            assert(got.count(_.getAs[Long]("qid") == 0L) < Similarity.K,
+              s"the three-vector cell gave query 0 a full top-K: $what")
+        }
+      }
+    }
+  }
+
   test("Lloyd iterations (QuantIters knob): recall non-decreasing on a clustered corpus") {
     // Random vectors cannot show quantizer quality (nothing to converge to),
     // so this runs on a synthetic CLUSTERED corpus: 16 well-separated
