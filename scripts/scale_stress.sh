@@ -7,7 +7,7 @@
 #   multiplier: 10 (default, the sf1 shape), 100 (the linearity decade),
 #   or 1000 (the deployment decade: 600M lineitem / 25 GB — needs
 #   SPARK_DRIVER_MEM≈64g and a data-sized shuffle width, both defaulted
-#   below per SURVEY §1's spill rule; see JobAudit's note)
+#   below per SURVEY §1's spill rule; see graft.Audit's note)
 #
 # SPARK_GRAFT_QUERIES (comma-separated entry names) replaces the default
 # query list, e.g. SPARK_GRAFT_QUERIES=d_cluster,p_token_budget.

@@ -3,11 +3,11 @@
 # `spark.sql.join.preferSortMergeJoin=false` lets Spark pick shuffled-hash
 # join where the per-partition build fits — trading SMJ's sorts for hash
 # builds on the multi-key fact⋈fact web. Suite subset q3/q5/q9/q12/q18 at
-# 1000×, ALTERNATED min-of-2 (legA, legB, legA, legB — both legs share the
-# same cache/shuffle state drift), reps=1 per JVM so the alternation is
-# across sessions, AuditMetrics per query (the spill column IS the
-# experiment: SHJ forfeits sort-spill graceful degradation, so a winning
-# wall with nonzero spill is a memory cliff waiting for a bigger decade).
+# 1000×, one graft.Audit ab run: leg A (SMJ) and leg B (SHJ) alternated
+# inside one JVM, min-of-2, with identical rows asserted per query and
+# each leg's task metrics printed (the spill column IS the experiment: SHJ
+# forfeits sort-spill graceful degradation, so a winning wall with nonzero
+# spill is a memory cliff waiting for a bigger decade).
 #
 # Usage: scripts/shj_ab.sh [dir] [outLog]
 set -euo pipefail
@@ -18,19 +18,7 @@ LOG="${2:-/tmp/shj_ab.log}"
 : "${SPARK_DRIVER_MEM:=64g}"; export SPARK_DRIVER_MEM
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
 export SPARK_GRAFT_SHUFFLE="${SPARK_GRAFT_SHUFFLE:-256}"
-export SPARK_GRAFT_TPCH_MODE=walls
-export SPARK_GRAFT_TPCH_REPS=1
-export SPARK_GRAFT_TPCH_FILTER="q3,q5,q9,q12,q18"
 
-run_leg() { # $1 = leg name, $2 = conf
-  echo "=== leg $1 rep $3 ($(date -u +%H:%M:%S)) conf='$2'" | tee -a "$LOG"
-  SPARK_GRAFT_TPCH_CONF="$2" sbt -batch "runMain graft.TpchAudit $DIR" 2>&1 \
-    | grep -E "\[tpchaudit" | sed "s/^/[$1-$3] /" | tee -a "$LOG"
-}
-
-: > "$LOG"
-for rep in 1 2; do
-  run_leg smj "" "$rep"
-  run_leg shj "spark.sql.join.preferSortMergeJoin=false" "$rep"
-done
-echo "=== done $(date -u +%H:%M:%S)" | tee -a "$LOG"
+sbt -batch "runMain graft.Audit ab $DIR q3,q5,q9,q12,q18 --reps 2 \
+--b spark.sql.join.preferSortMergeJoin=false" 2>&1 \
+  | grep -E "\[audit" | tee "$LOG"

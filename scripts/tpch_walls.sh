@@ -1,8 +1,7 @@
 #!/usr/bin/env bash
 # TPC-H decade walls (BASELINE.md three-decade tables): full q1-q22 walls
-# via TpchAudit walls mode, min-of-N in ONE session (the r15 protocol).
-# Round 17 re-pins both decades on the RECALIBRATED ScaleGen data
-# (long-tailed lines-per-order — q18 does real work now).
+# via graft.Audit walls, min-of-N in ONE session (the r15 protocol), with
+# cost-based reorder off as in the BASELINE decade tables.
 #
 # Usage: scripts/tpch_walls.sh [multiplier] [reps]
 set -euo pipefail
@@ -17,7 +16,8 @@ if [ "$MULT" -ge 1000 ]; then
   : "${SPARK_GRAFT_SHUFFLE:=256}"; export SPARK_GRAFT_SHUFFLE
 fi
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
-export SPARK_GRAFT_TPCH_MODE=walls
-export SPARK_GRAFT_TPCH_REPS="$REPS"
 
-sbt -batch "runMain graft.TpchAudit $DIR" 2>&1 | grep -E "\[tpchaudit"
+# quoted, so the conf set reaches graft.Audit as one argument
+OFF="spark.sql.cbo.enabled=false;spark.sql.cbo.joinReorder.enabled=false"
+sbt -batch "runMain graft.Audit walls $DIR tpch --reps $REPS --conf \"$OFF\"" \
+  2>&1 | grep -E "\[audit"

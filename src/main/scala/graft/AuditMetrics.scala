@@ -2,34 +2,42 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import scala.collection.mutable
 
-/** Task-metrics accumulator shared by the audit mains (TpchAudit walls /
-  * bucket, JobAudit walls): a decade wall is ATTRIBUTED, not guessed at —
-  * a super-linear step between decades reads either as spill (memory/disk
-  * spill bytes go nonzero), as I/O (input bytes outgrow CPU time), or as
-  * genuine extra work (CPU time tracks the wall). Listener delivery is
-  * async; callers snapshot after their GC-settle pause (≥1 s), which
-  * bounds the undercount to the final in-flight events of a finished
-  * query — noise at audit-scale walls. */
-/** Shared env parsing for the audit mains. */
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
+
+/** Conf sets and the host stamp shared by the measurement mains. */
 private[graft] object AuditEnv {
-  /** Parse "k=v;k=v" conf-injection env vars (SPARK_GRAFT_JOB_CONF /
-    * SPARK_GRAFT_TPCH_CONF). Empty segments (a stray `;;` or trailing
+  /** Parse a `k=v;k=v` conf set. Empty segments (a stray `;;` or trailing
     * `;`) are skipped; a segment without '=' fails with a message naming
-    * the variable and the bad segment instead of a bare MatchError after
-    * the expensive ANALYZE has already run (review r15). */
-  def applyConfs(spark: org.apache.spark.sql.SparkSession,
-      envVar: String): Unit =
-    sys.env.get(envVar).foreach(_.split(";").map(_.trim).filter(_.nonEmpty)
-      .foreach { kv =>
-        val i = kv.indexOf('=')
-        require(i > 0, s"$envVar: segment '$kv' is not k=v")
-        spark.conf.set(kv.take(i).trim, kv.drop(i + 1).trim)
-      })
+    * the bad segment, not a bare MatchError after the expensive ANALYZE
+    * has already run. */
+  def confs(spec: String): Seq[(String, String)] =
+    spec.split(";").map(_.trim).filter(_.nonEmpty).toSeq.map { kv =>
+      val i = kv.indexOf('=')
+      require(i > 0, s"conf set: segment '$kv' is not k=v")
+      kv.take(i).trim -> kv.drop(i + 1).trim
+    }
 
-  /** Host-state snapshot as a JSON object — shared by [[Bench]] and the
-    * audit mains so every measurement artifact declares its own
+  def applyConfs(spark: SparkSession, spec: String): Unit =
+    confs(spec).foreach { case (k, v) => spark.conf.set(k, v) }
+
+  /** `body` with the conf set applied; the previous values come back
+    * afterwards, so alternated legs never see each other's confs. */
+  def withConfs[A](spark: SparkSession, spec: String)(body: => A): A = {
+    val prev = confs(spec).map { case (k, _) => k -> spark.conf.getOption(k) }
+    applyConfs(spark, spec)
+    try body
+    finally prev.reverse.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Host-state snapshot as a JSON object — shared by [[Bench]] and
+    * [[Audit]] so every measurement artifact declares its own
     * environment (VERDICT r15 #6, extended to the audits in round 17 per
     * VERDICT r16 #3: the r16 driver bench read 9% high with a "clean"
     * load1 — load15 4.55 vs the clean-run ~1.7 was the tell, so the
@@ -45,7 +53,7 @@ private[graft] object AuditEnv {
     *     minute — this JVM alone on a 32-core box reads ~0), or
     *   for the BENCH, end load15 > 3.5  (≈2× its clean reference of
     *     ~1.7; load1 is too twitchy to catch sustained ~9%
-    *     contamination). The audit mains' own sustained 32-thread
+    *     contamination). An audit's own sustained 32-thread
     *     queries push END load15 past 20 legitimately, and their START
     *     load15 can carry a PREVIOUS run's decay on a measurement day —
     *     for audits the start check is load1 + PSI + java_procs.
@@ -83,6 +91,14 @@ private[graft] object AuditEnv {
   }
 }
 
+/** Task and job metrics shared by [[Audit]]'s walls and jobs modes and
+  * [[Bench]] under SPARK_GRAFT_BENCH_METRICS: a decade wall is ATTRIBUTED,
+  * not guessed at. A super-linear step between decades reads either as
+  * spill (memory/disk spill bytes go nonzero), as I/O (input bytes
+  * outgrow CPU time), or as genuine extra work (CPU time tracks the wall).
+  * Per job it keeps the rows of [[jobTable]]. Listener delivery is async;
+  * callers read after a pause of at least 1 s, which bounds the
+  * undercount to the final in-flight events of a finished query. */
 private[graft] final class AuditMetrics extends SparkListener {
   val bytesRead = new AtomicLong
   val shuffleWrite = new AtomicLong
@@ -115,9 +131,54 @@ private[graft] final class AuditMetrics extends SparkListener {
     }
   }
 
-  def reset(): Unit = Seq(bytesRead, shuffleWrite, memSpill, diskSpill,
-    runTimeMs, cpuTimeNs, gcTimeMs, fetchWaitMs, shufWriteNs)
-    .foreach(_.set(0L))
+  private final class JobRow(val site: String, val t0: Long) {
+    var t1, taskMs, shufR, shufW = 0L
+    var stages, tasks = 0
+  }
+  private val jobs = mutable.LinkedHashMap[Int, JobRow]()
+  private val stageToJob = mutable.HashMap[Int, Int]()
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    jobs(e.jobId) = new JobRow(Option(e.properties)
+      .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse(""),
+      e.time)
+    e.stageIds.foreach(stageToJob(_) = e.jobId)
+  }
+
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+    jobs.get(e.jobId).foreach(_.t1 = e.time)
+  }
+
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+    synchronized {
+      val si = e.stageInfo
+      stageToJob.get(si.stageId).flatMap(jobs.get).foreach { j =>
+        j.stages += 1
+        j.tasks += si.numTasks
+        j.taskMs += si.taskMetrics.executorRunTime
+        j.shufR += si.taskMetrics.shuffleReadMetrics.totalBytesRead
+        j.shufW += si.taskMetrics.shuffleWriteMetrics.bytesWritten
+      }
+    }
+
+  def reset(): Unit = {
+    Seq(bytesRead, shuffleWrite, memSpill, diskSpill, runTimeMs, cpuTimeNs,
+      gcTimeMs, fetchWaitMs, shufWriteNs).foreach(_.set(0L))
+    synchronized { jobs.clear(); stageToJob.clear() }
+  }
+
+  def jobCount: Int = synchronized(jobs.size)
+
+  /** One line per job since [[reset]]: wall, stages, tasks, total task
+    * time, shuffle bytes and call site. */
+  def jobTable: String = synchronized {
+    jobs.map { case (id, j) =>
+      f"  job $id%3d wall=${(j.t1 - j.t0) / 1000.0}%7.3fs " +
+        f"stages=${j.stages}%2d tasks=${j.tasks}%4d " +
+        f"taskTime=${j.taskMs / 1000.0}%8.3fs " +
+        f"shufR=${j.shufR / 1e6}%8.2fMB shufW=${j.shufW / 1e6}%8.2fMB ${j.site}"
+    }.mkString("\n")
+  }
 
   def report: String = {
     def gb(b: Long): String = f"${b / 1e9}%.1fGB"

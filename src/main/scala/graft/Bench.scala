@@ -49,13 +49,13 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_SHUFFLE: shuffle width independent of core count — the
     // 1000×-directory runs need partitions sized to the DATA (SURVEY §1
-    // spill rule; see JobAudit's note), with AQE coalescing the small
+    // spill rule; see graft.Audit's note), with AQE coalescing the small
     // ones. Default unchanged: cpus (the driver's bench protocol).
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     // the session users get: CBO + join reorder on and the graft rules
     // installed, over stat-less reads (bench entries read parquet paths
     // directly and never see catalog stats — the stats-present case is
-    // TpchAudit/JobAudit's lane)
+    // graft.Audit's lane)
     val spark = Graft.session(s"local[$cpus]", "graft-bench", shuffle.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
@@ -96,7 +96,7 @@ object Bench {
     // family) are timed cold — measuring cache hits would flatter them;
     // System.gc() so one query's garbage is not another's pause.
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(5)
-    // SPARK_GRAFT_BENCH_METRICS=1: per-rep task metrics (the audit mains'
+    // SPARK_GRAFT_BENCH_METRICS=1: per-rep task metrics (graft.Audit's
     // AuditMetrics discipline) for ATTRIBUTING a bench row's cost — round
     // 17 (VERDICT r16 #7): the d_minhash_inc_serve drift (r14 1.64 →
     // r16 1.90 s) needed read/shuffle/spill/CPU per rep to be explained,

@@ -94,7 +94,7 @@ object Graft extends org.apache.spark.internal.Logging {
     * post-reorder rules installed, and `shufflePartitions` as the shuffle
     * width. It defaults to the machine's core count, which is what the
     * default `local[*]` master runs on; mains that size shuffles to the
-    * data rather than the cores (Bench, the audit mains under
+    * data rather than the cores (Bench and [[Audit]] under
     * `SPARK_GRAFT_SHUFFLE`) pass it explicitly.
     *
     * getOrCreate IGNORES builder configs when a session already exists in
@@ -186,7 +186,8 @@ object Graft extends org.apache.spark.internal.Logging {
     * is already written — the static decision is what avoids the 60M-row
     * exchange entirely). Hence the map-form `enableCbo` takes
     * `broadcastThreshold` as a parameter: re-bisect per deployment with
-    * `SPARK_GRAFT_JOB_BCAST`/`_STATIC` and pass the measured knee. */
+    * [[Audit]]'s `ab` mode (leg B `spark.sql.autoBroadcastJoinThreshold=…`)
+    * and pass the measured knee. */
   val cboBroadcastThreshold: String = "32MB"
 
   /** The general front door (VERDICT r13 #6): ANY user's (name → path)
@@ -245,9 +246,9 @@ object Graft extends org.apache.spark.internal.Logging {
     *     `TimestampNTZType`, so any `ntz_col >= TIMESTAMP '…'` range
     *     predicate over a stats-bearing NTZ column dies with a
     *     `scala.MatchError` INTERNAL_ERROR at optimization time (found
-    *     by the round-14 CBO fuzz leg, shape fz_0039; standalone repro:
-    *     `scripts/repro_ntz_cbo.sh` → [[ReproNtzCbo]], which proves the
-    *     stock crash AND this workaround's pass in one run; parquet
+    *     by the round-14 CBO fuzz leg, shape fz_0039; JobStatsSpec's
+    *     "TIMESTAMP_NTZ" case proves the stock crash AND this
+    *     workaround's pass, and fails once Spark fixes the bug; parquet
     *     written without isAdjustedToUTC — e.g. by arrow — reads as NTZ,
     *     so real user tables hit this). Skipping
     *     the column's stats keeps CBO working off the remaining columns

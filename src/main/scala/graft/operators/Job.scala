@@ -1059,7 +1059,7 @@ object Job {
   /** PRE-round-12 FROM lists for the heavy-tail families — the ORIGINAL,
     * syntax-hostile relation orders the r12 hub-first rewrite replaced
     * (fact legs first, reducing hub last; git 922110c/5f49d52). Kept as
-    * the INPUT to JobAudit's stats mode (SPARK_GRAFT_JOB_STATS=1): the
+    * leg B's text in graft.Audit's `ab --original-from`: the
     * r12 fix hand-encodes the order a cost-based optimizer derives, but a
     * real user's query arrives in arbitrary FROM order — the engine-native
     * answer is `ANALYZE TABLE … COMPUTE STATISTICS FOR ALL COLUMNS` +

@@ -708,16 +708,17 @@ object Multimodal {
 
   def mPhashDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val hashes = aHashOn(phashFrame(spark, dir))
-      // referenced twice by the chunk self-join (d_simhash convention)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = phashPairs(hashes)
-    // The persisted hash frame (corpus-sized: one long per image) must not
-    // outlive the query — ADVICE r9 flagged the session-lifetime leak in a
-    // long Verify run. Pin the (tiny, dup-pairs-sized) result eagerly, then
+    // Both sides of the chunk self-join read the hashes, and AQE runs them
+    // as concurrent stages: a lazily stored frame let two tasks compute the
+    // same block ("Block rdd_… already exists"). Pinned eagerly, the
+    // blocks exist before either side starts.
+    val hashes = Checkpoints.pin(aHashOn(phashFrame(spark, dir)), eager = true)
+    // The hash frame (corpus-sized: one long per image) must not outlive
+    // the query — ADVICE r9 flagged the session-lifetime leak in a long
+    // Verify run. Pin the (tiny, dup-pairs-sized) result eagerly, then
     // release the hash frame; the returned plan reads only the pinned rows.
-    val out = Checkpoints.pin(pairs, eager = true)
-    hashes.unpersist(blocking = false)
+    val out = Checkpoints.pin(phashPairs(hashes), eager = true)
+    Checkpoints.release(hashes)
     out
   }
 

@@ -163,5 +163,21 @@ class SessionSpec extends SparkSpec {
     val levels = offenders("Config" + "urator", notMain)
     assert(levels.isEmpty,
       s"log levels changed at run time: ${levels.mkString(", ")}")
+    // every environment knob under src/main is on this list, so a new one
+    // is added on purpose; measurement settings are arguments
+    // (graft.Audit), and a read through a non-literal key cannot be checked
+    val knobs = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE",
+      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_QUERIES", "SPARK_GRAFT_BENCH_REPS",
+      "SPARK_GRAFT_BENCH_METRICS", "SPARK_GRAFT_BENCH_OUT")
+    val envRead = ("(?:sys" + "\\.env|System" + "\\.getenv)" +
+      "(?:\\.(?:getOrElse|contains|get))?\\s*(\\(\\s*\"([A-Z0-9_]+)\")?").r
+    val unlisted = sources.filter(_._1.startsWith("src/main/")).flatMap {
+      case (p, txt) => envRead.findAllMatchIn(txt).collect {
+        case m if m.group(2) == null || !knobs(m.group(2)) =>
+          s"$p: ${Option(m.group(2)).getOrElse(m.matched)}"
+      }
+    }
+    assert(unlisted.isEmpty,
+      s"environment knobs off the allow-list: ${unlisted.mkString(", ")}")
   }
 }

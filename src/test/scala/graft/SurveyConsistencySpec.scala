@@ -164,7 +164,7 @@ class SurveyConsistencySpec extends AnyFunSuite {
         val missing = expanded.filterNot(p => Files.exists(Paths.get(p)))
         assert(missing.isEmpty,
           s"$doc cites ${missing.mkString(", ")} but no such file is " +
-            "committed — dump the plan (PlanDump) or correct the citation")
+            "committed — dump the plan (graft.Audit plans --out) or correct the citation")
       }
     }
   }
